@@ -1,12 +1,17 @@
 """Output checks: minute reports against the generator's tally, and the
-query_mix results against each query's DuckDB oracle SQL."""
+query_mix results against each query's DuckDB oracle SQL, compared the way
+the repository's oracle check (`tools/check_oracle.py`) compares them."""
 import glob
 import json
 import os
 import re
+import sys
 
-TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
-          "lineitem", "events", "documents", "embeddings"]
+import duckdb
+import pandas as pd
+
+sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools"))
+from check_oracle import TABLES, normalize  # noqa: E402
 
 
 def read_report(report_dir):
@@ -58,27 +63,10 @@ def oracle_sql_for_run(sql, results_dir):
     return _GOLDEN.sub(sub, sql)
 
 
-def _normalize(df):
-    df = df[sorted(df.columns)].reset_index(drop=True)
-    for c in df.columns:
-        kind = str(df[c].dtype)
-        if kind.startswith("datetime"):
-            df[c] = df[c].astype("datetime64[us]")
-        elif df[c].dtype == object:
-            df[c] = df[c].astype(str)
-        elif kind.startswith(("int", "uint", "Int")):
-            df[c] = df[c].astype("int64")
-        elif kind.startswith("float"):
-            df[c] = df[c].astype("float64")
-    return df
-
-
 def oracle_errors(data_dir, results_dir, oracle_sql, names):
     """{query: why} for every query whose result differs from its oracle.
 
     A query without oracle SQL is an error: every query in the mix has one."""
-    import duckdb
-    import pandas as pd
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM "
@@ -89,8 +77,8 @@ def oracle_errors(data_dir, results_dir, oracle_sql, names):
             errors[name] = "no oracle SQL"
             continue
         try:
-            want = _normalize(con.execute(oracle_sql_for_run(oracle_sql[name], results_dir)).df())
-            got = _normalize(pd.read_parquet(os.path.join(results_dir, name)))
+            want = normalize(con.execute(oracle_sql_for_run(oracle_sql[name], results_dir)).df())
+            got = normalize(pd.read_parquet(os.path.join(results_dir, name)))
             if list(want.columns) != list(got.columns):
                 errors[name] = f"columns {list(got.columns)} != {list(want.columns)}"
             elif len(want) != len(got):

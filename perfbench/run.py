@@ -3,7 +3,7 @@ checks its outputs and prints one JSON line of metrics.
 
 Usage:
   python3 perfbench/run.py --workload minute_live|catchup|query_mix \
-      --seed N --seconds S --trace 0|1 [--trace-file PATH] [--keep]
+      --seed N --seconds S --trace 0|1 [--trace-file PATH]
 
 With --trace 0 the printed metrics are the end-to-end metrics; with
 --trace 1 they are the per-layer metrics, and --trace-file writes the
@@ -16,6 +16,7 @@ import os
 import shutil
 import subprocess
 import sys
+import threading
 import time
 
 HERE = os.path.dirname(os.path.abspath(__file__))
@@ -43,6 +44,34 @@ def cpu_times():
     with open("/proc/stat") as f:
         v = [int(x) for x in f.readline().split()[1:]]
     return sum(v[:8]), v[4], v[7] if len(v) > 7 else 0
+
+
+class HostProbe(threading.Thread):
+    """While the harness runs, times a fixed single-threaded loop every half
+    second, in CPU time of its own thread (so neither waiting for a core nor
+    hypervisor steal counts). Its median is the speed the host gave a core
+    over the run: on a shared host it moves by a fifth between ten-second
+    stretches, and every timing metric moves with it. Costs about 1% of
+    one core."""
+
+    def __init__(self):
+        super().__init__(daemon=True)
+        self.samples = []
+        self.done = threading.Event()
+
+    def run(self):
+        while not self.done.wait(0.5):
+            t0 = time.thread_time()
+            x = 0
+            for i in range(100_000):
+                x += i * i
+            self.samples.append((time.thread_time() - t0) * 1e3)
+
+    def finish(self):
+        """Stop sampling; the median loop time in ms."""
+        self.done.set()
+        self.join()
+        return median(self.samples) if self.samples else 0.0
 
 
 def run_jvm(classes, work, args, timeout):
@@ -179,7 +208,7 @@ for _q in MIX_QUERIES:
 for _n, _u in [("jvm.gc_s", "s"), ("jvm.heap_peak_mb", "MB"), ("gen.lag_max_s", "s"),
                ("fail_ratio", "ratio"), ("setup.session_start_s", "s"),
                ("setup.staging_s", "s"), ("setup.warmup_s", "s"),
-               ("host.steal_pct", "%"), ("host.iowait_pct", "%")]:
+               ("host.steal_pct", "%"), ("host.iowait_pct", "%"), ("host.cpu_probe_ms", "ms")]:
     _layer(_n, _u)
 
 
@@ -283,16 +312,13 @@ def layer_metrics(raw, trace, failed, attempted, stat):
                                   [x for x in xs if x.get("action") != "collect"]))
     elif w == "catchup":
         rounds = raw["rounds"]
-        # each round's drain is one batch; the first ones are warm-up rounds
-        warm = raw["warmup_units"]
-        m[INGEST["batches_per_minute"]] = len(prog[warm:]) / (len(rounds) * raw["backlog_minutes"])
-        ingest_phases(prog[warm:])
-        # task counters of the ingest cover every round, warm-up included
-        minutes = (len(rounds) + warm) * raw["backlog_minutes"]
+        minutes = len(rounds) * raw["backlog_minutes"]
+        m[INGEST["batches_per_minute"]] = len(prog) / minutes
+        ingest_phases(prog)
         m[INGEST["drain_s"]] = _med(rd["drain_s"] for rd in rounds)
         m[INGEST["drain_eps"]] = _med(rd["events"] / rd["drain_s"] for rd in rounds)
         m[INGEST["files_per_minute"]] = _med(rd["warehouse_files"] / raw["backlog_minutes"] for rd in rounds)
-        events = (len(rounds) + warm) * rounds[0]["events"]
+        events = len(rounds) * rounds[0]["events"]
         steps = {}
         for s in spans:
             # warm-up rounds are numbered below 1
@@ -338,7 +364,7 @@ def layer_metrics(raw, trace, failed, attempted, stat):
     m["setup.session_start_s"] = raw["session_start_s"]
     m["setup.staging_s"] = median(raw["staging_s"])
     m["setup.warmup_s"] = raw["warmup_s"]
-    m["host.steal_pct"], m["host.iowait_pct"] = stat
+    m["host.steal_pct"], m["host.iowait_pct"], m["host.cpu_probe_ms"] = stat
     return m
 
 
@@ -351,7 +377,6 @@ def main():
     ap.add_argument("--seconds", type=float, required=True)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
     ap.add_argument("--trace-file")
-    ap.add_argument("--keep", action="store_true", help="keep the run's work directory")
     a = ap.parse_args()
     t_start = time.monotonic()
 
@@ -374,7 +399,12 @@ def main():
                 staging.append(time.monotonic() - t0)
             args += ["--data", data_dir]
         budget = JVM_TIMEOUT_S - (time.monotonic() - t_start)
-        rc = run_jvm(classes, work, args, budget)
+        probe = HostProbe()
+        probe.start()
+        try:
+            rc = run_jvm(classes, work, args, budget)
+        finally:
+            probe_ms = probe.finish()
         stat1 = cpu_times()
         if rc != 0:
             sys.stderr.write(tail(os.path.join(work, "jvm.log")))
@@ -390,13 +420,14 @@ def main():
                     "nproc": os.cpu_count(), "session_cores": raw["cores"],
                     "spark": raw["spark_version"], "java": raw["java_version"],
                     "host_steal_pct": round(stat[0], 3), "host_iowait_pct": round(stat[1], 3),
+                    "host_cpu_probe_ms": round(probe_ms, 3),
                     "gen_lag_max_s": raw.get("gen_lag_max_s", 0.0),
                     "warmup_discarded": raw["warmup_units"]}
         for p in problems[:20]:
             sys.stderr.write(f"[perfbench] {p}\n")
         sys.stderr.write("[perfbench] envelope " + json.dumps(envelope) + "\n")
         if a.trace:
-            layers = layer_metrics(raw, raw["trace"], failed, attempted, stat)
+            layers = layer_metrics(raw, raw["trace"], failed, attempted, stat + (probe_ms,))
             metrics = {k: {"value": v, "unit": LAYER_UNITS[k]} for k, v in layers.items()}
             if a.trace_file:
                 with open(a.trace_file, "w") as f:
@@ -409,8 +440,7 @@ def main():
                           "metrics": metrics}))
         return 0 if correct else 1
     finally:
-        if not a.keep:
-            shutil.rmtree(work, ignore_errors=True)
+        shutil.rmtree(work, ignore_errors=True)
 
 
 if __name__ == "__main__":

@@ -23,7 +23,7 @@ import graft.streaming.Ingest
   * runner (`perfbench/run.py`) turns them into metrics and checks outputs.
   *
   *   Harness --workload minute_live|catchup|query_mix --seed N --seconds S
-  *           --trace 0|1 --work DIR --out FILE [--data DIR] [--cores N]
+  *           --trace 0|1 --work DIR --out FILE [--data DIR]
   *   Harness --selftest-wire --out FILE
   *
   * Every call into the program goes through a public entry point:
@@ -54,7 +54,7 @@ object Harness {
     val seed = opts("seed").toLong
     val seconds = opts("seconds").toDouble
     val work = new File(opts("work")).getAbsolutePath
-    val cores = opts.get("cores").map(_.toInt).getOrElse(Runtime.getRuntime.availableProcessors)
+    val cores = Runtime.getRuntime.availableProcessors
 
     val spark = GraftSession.local(cores)
     val sessionStart = ManagementFactory.getRuntimeMXBean.getUptime / 1e3
@@ -190,6 +190,7 @@ final class Run(spark: SparkSession, tr: Tracer, seed: Long, seconds: Double, wo
       Pipeline.minutelyReport(spark, preWh, dir("live", "prewarm-reports"),
         Instant.ofEpochMilli(wire.startMs + (m + 1) * 60000L))
     }
+    tr.discardIngest()
     val topic = MemoryStream[(Array[Byte], Array[Byte])](6)(
       Encoders.tuple(Encoders.BINARY, Encoders.BINARY), spark.sqlContext)
     val q = Pipeline.ingest(
@@ -341,6 +342,7 @@ final class Run(spark: SparkSession, tr: Tracer, seed: Long, seconds: Double, wo
     val tWarm = now
     (1 to WarmRounds).foreach(r => round(-r))
     val warmupS = secs(tWarm)
+    tr.discardIngest()
     val window = new Window(() => 0L)
     window.start()
     val tMeasure = now

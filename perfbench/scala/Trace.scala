@@ -148,6 +148,14 @@ final class Tracer(spark: SparkSession, val on: Boolean) {
     spark.streams.addListener(StreamListener)
   }
 
+  /** Forget the streaming counters and progress records gathered so far, so
+    * the ingest metrics cover only the streaming queries that run after
+    * this call (not a warm-up's). */
+  def discardIngest(): Unit = if (on) {
+    org.apache.spark.PerfbenchBus.drain(spark.sparkContext)
+    synchronized { counts.remove(-1); progress.clear() }
+  }
+
   /** Every span with the counters charged to it, every SQL execution with
     * its owning span, and every streaming progress record. Waits for the
     * listener bus to deliver outstanding events first. */
