@@ -225,11 +225,18 @@ object Bench {
     * intermittently vanish. Loadavg is BLIND to it (stolen time still
     * counts threads as running), which is how r9/r12/r15 scale-leg
     * blowups kept self-labeling `host_contended: false`. */
-  private def cpuTicks(): (Long, Long, Long) = scala.util.Try {
-    val f = Files.readAllLines(Paths.get("/proc/stat")).get(0)
-      .trim.split("\\s+").drop(1).map(_.toLong)
-    (f(4), if (f.length > 7) f(7) else 0L, f.sum)
-  }.getOrElse((-1L, -1L, -1L))
+  private def cpuTicks(): (Long, Long, Long) = scala.util.Try(
+    cpuTicksOf(Files.readAllLines(Paths.get("/proc/stat")).get(0))
+  ).getOrElse((-1L, -1L, -1L))
+
+  /** (iowait, steal, total) of one /proc/stat cpu line. A line without
+    * the steal column (≤ 7 counters, pre-2.6.11 kernels) yields steal −1,
+    * so `host_steal_pct` reads the −1.0 "not measured" sentinel that
+    * iowait and loadavg use, never a quiet-looking 0.0. */
+  def cpuTicksOf(line: String): (Long, Long, Long) = {
+    val f = line.trim.split("\\s+").drop(1).map(_.toLong)
+    (f(4), if (f.length > 7) f(7) else -1L, f.sum)
+  }
 
   /** Run one leg rep and append the host's 1-min loadavg at rep START plus
     * the iowait and STEAL shares of cpu jiffies ACROSS the rep. These flow

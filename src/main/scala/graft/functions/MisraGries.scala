@@ -9,7 +9,7 @@ import org.apache.spark.sql.expressions.Aggregator
   * Elements", 1982; mergeable form per Agarwal, Cormode, Huang, Phillips,
   * Wei & Yi, "Mergeable Summaries", PODS 2012) — the deterministic
   * frequency member of the bounded-state sketch family, beside CMS
-  * ([[CountMinAggregator]]), HLL, KLL and the t-digest. Where CMS
+  * ([[CountMinAggregator]]), HLL and KLL. Where CMS
   * OVERestimates (hash collisions add) and its error bound is
   * probabilistic, Misra–Gries UNDERestimates and carries a deterministic
   * guarantee with no hashing at all:
@@ -28,7 +28,8 @@ import org.apache.spark.sql.expressions.Aggregator
   * block, independent of input size — and the serialized form is a plain
   * (key, count) list that merges associatively, so per-grain cells
   * (minute → day → total) re-slice without re-touching raw rows, the same
-  * lifecycle as the KLL rollup cells ([[KllSketch]]).
+  * lifecycle as the KLL rollup cells
+  * ([[graft.streaming.Ingest.upsertQuantileRollup]]).
   *
   * Merge (Mergeable Summaries §3.1): add counters pointwise; if more than
   * k keys survive, subtract the (k+1)-th largest counter value from every
@@ -45,7 +46,7 @@ import org.apache.spark.sql.expressions.Aggregator
   * buffer encoder round-trips reliably; `mutable.LongMap` in a Kryo
   * aggregation buffer deserializes into a structurally corrupt object
   * that SEGVs the JVM inside `foreachEntry` (observed on Spark 4.1.2's
-  * chill registrar — same reason [[KllSketch]] keeps raw arrays).
+  * chill registrar).
   */
 object MisraGries {
 

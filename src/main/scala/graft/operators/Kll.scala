@@ -1,24 +1,25 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.functions.KllSketch
 
-/** KLL quantile-sketch queries — the mergeable-quantile complement to the
-  * t-digest surface (EventOps.tdigestCheck). What KLL adds over the
-  * t-digest is not accuracy but LIFECYCLE: its serialized form is a plain
-  * binary cell that merges associatively with `KllMergeAgg`, so per-grain
+/** KLL quantile-sketch queries over Spark's built-in DataSketches KLL
+  * (`kll_sketch_agg_double` / `kll_merge_agg_double` /
+  * `kll_sketch_get_quantile_double`) — the mergeable-quantile complement
+  * to the `percentile_approx` surface (EventOps.tdigestCheck). What KLL
+  * adds is not accuracy but LIFECYCLE: the sketch is a plain binary cell
+  * that merges associatively with `kll_merge_agg_double`, so per-grain
   * sketches (minute cells) can be stored in a maintained view and
   * re-sliced to any coarser grain later — the quantile analog of the HLL
   * rollup ([[graft.streaming.Ingest.upsertSketchRollup]]); the streaming
   * maintained view is `Ingest.upsertQuantileRollup`, QuantileRollupSpec.
   *
-  * Both queries are gated by the shared [[QuantileGuard]] harness (exact
-  * discrete quantiles recomputed by DuckDB + a realized-rank ≤ 0.02 flag)
-  * because sketch contents are merge-order-dependent — same reasoning as
-  * the t-digest check, see QuantileGuard's Scaladoc.
+  * All three queries are gated by the shared [[QuantileGuard]] harness
+  * (exact discrete quantiles recomputed by DuckDB + a realized-rank ≤ 0.02
+  * flag) because the sketch is randomized: its estimates vary between
+  * runs within the rank bound — see QuantileGuard's Scaladoc.
   *
   * Scale shape: one hash shuffle on the grouping key; per-group state is
   * the O(k)-bounded sketch (~10 KB) with map-side partial merge, never
@@ -29,18 +30,29 @@ import graft.functions.KllSketch
   */
 object Kll {
 
+  /** The `k` of every KLL sketch the engine builds or merges: rollup
+    * cells, the minute report, the health report and the queries below.
+    * DataSketches' single-rank error at k = 400 is ≈0.7% at 99%
+    * confidence, inside the 1% bound KllSketchSpec pins (the library
+    * default, 200, gives ≈1.3%). Cells merged at a smaller k would
+    * silently coarsen to it, so every merge passes this value too. */
+  val K = 400
+
+  /** (e50, e90, e99) read off a KLL sketch column — stored input values,
+    * the discrete ⌈q·n⌉ convention the rank guards use. */
+  private def estimates(sk: Column): Seq[Column] =
+    Seq(0.5 -> "e50", 0.9 -> "e90", 0.99 -> "e99").map { case (q, name) =>
+      kll_sketch_get_quantile_double(sk, lit(q)).as(name)
+    }
+
   /** Per-type KLL estimates (event_type, e50, e90, e99) — direct build. */
   private def kllEstimates(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val kll = new KllSketch.KllQuantiles().toColumn.name("qs")
     Tables.events(s, d)
       .select($"event_type", $"value").na.drop()
-      .as[(String, Double)]
-      .groupByKey(_._1)
-      .mapValues(_._2)
-      .agg(kll)
-      .map { case (et, qs) => (et, qs(0), qs(1), qs(2)) }
-      .toDF("event_type", "e50", "e90", "e99")
+      .groupBy($"event_type")
+      .agg(kll_sketch_agg_double($"value", K).as("sk"))
+      .select($"event_type" +: estimates($"sk"): _*)
   }
 
   /** Rank-guarded check of the directly-built per-type KLL sketch. */
@@ -49,28 +61,22 @@ object Kll {
 
   /** The mergeability proof, oracle-gated: build one serialized sketch
     * CELL per (event_type, minute) — the maintained-view grain — then
-    * merge cells per type with `KllMergeAgg` and probe the MERGED sketch.
-    * The guard passing certifies that quantiles served from rolled-up
-    * cells are as good as a direct build, i.e. the minute→total re-slice
-    * loses nothing beyond the sketch's own rank bound. */
+    * merge cells per type with `kll_merge_agg_double` and probe the
+    * MERGED sketch. The guard passing certifies that quantiles served
+    * from rolled-up cells are as good as a direct build, i.e. the
+    * minute→total re-slice loses nothing beyond the sketch's own rank
+    * bound. */
   def kllRollupGrains(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val kllVal = udaf(new KllSketch.KllFromValues(), Encoders.scalaDouble)
-    val kllMerge = udaf(new KllSketch.KllMergeAgg(), Encoders.BINARY)
     val cells = Tables.events(s, d)
       .select($"event_type", date_trunc("minute", $"ts").as("m"), $"value")
       .na.drop()
       .groupBy($"event_type", $"m")
-      .agg(kllVal($"value").as("sk"))
+      .agg(kll_sketch_agg_double($"value", K).as("sk"))
     val est = cells
       .groupBy($"event_type")
-      .agg(kllMerge($"sk").as("sk"))
-      .as[(String, Array[Byte])]
-      .map { case (et, sk) =>
-        val qs = KllSketch.quantilesOf(sk, Seq(0.5, 0.9, 0.99))
-        (et, qs(0), qs(1), qs(2))
-      }
-      .toDF("event_type", "e50", "e90", "e99")
+      .agg(kll_merge_agg_double($"sk", K).as("sk"))
+      .select($"event_type" +: estimates($"sk"): _*)
     QuantileGuard.check(s, d, est)
   }
 
@@ -86,19 +92,13 @@ object Kll {
     * [[graft.reference.MinuteReport.analyzeWithLatency]]. */
   def kllReportGrain(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val kllVal = udaf(new KllSketch.KllFromValues(), Encoders.scalaDouble)
     val ev = Tables.events(s, d)
       .select(date_format($"ts", "yyyy-MM-dd").as("day"), $"event_type",
         $"value".as("v"))
       .na.drop()
     val est = ev.groupBy($"day", $"event_type")
-      .agg(kllVal($"v").as("sk"))
-      .as[(String, String, Array[Byte])]
-      .map { case (day, et, sk) =>
-        val qs = KllSketch.quantilesOf(sk, Seq(0.5, 0.9, 0.99))
-        (day, et, qs(0), qs(1), qs(2))
-      }
-      .toDF("day", "event_type", "e50", "e90", "e99")
+      .agg(kll_sketch_agg_double($"v", K).as("sk"))
+      .select(Seq($"day", $"event_type") ++ estimates($"sk"): _*)
     QuantileGuard.checkAt(s, ev, Seq("day", "event_type"), est)
   }
 

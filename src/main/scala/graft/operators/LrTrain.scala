@@ -390,7 +390,10 @@ object LrTrain {
     val (w, b) = train(s, d)
     val raw = (0 until D).map(j => col("c")(j) * lit(w(j))).reduce(_ + _) + lit(b)
     val p4 = least(greatest(lit(2L * S) + raw, lit(0L)), lit(4L * S))
-    val conf = Tables.widened(Tables.documents(s, d))
+    // a NULL-text document has no tokens, so it lands in no confusion
+    // cell; it must not count in n either (the DuckDB oracle's
+    // unnest(string_split(NULL, ' ')) drops it the same way)
+    val conf = Tables.widened(Tables.documents(s, d).filter($"text".isNotNull))
       // __bks projected FIRST (the featuresOf lesson: lambda-bound
       // subtrees escape codegen subexpression elimination — inlining
       // re-hashes every token D times)

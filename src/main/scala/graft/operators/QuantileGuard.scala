@@ -6,7 +6,8 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 
 /** The rank-guard harness shared by every quantile-SKETCH query
-  * (t-digest, KLL): sketch estimates are merge-order-dependent — the one
+  * (`percentile_approx`, the built-in KLL): sketch estimates depend on
+  * merge order, and KLL's on its randomized compaction too — the one
   * thing no second engine can recompute bit-for-bit — but two derived
   * facts ARE deterministic and independently checkable:
   *
@@ -17,8 +18,8 @@ import graft.Tables
   *     bit-identical with zero rounding);
   *  2. a boolean asserting each estimate's REALIZED rank
   *     |rank(est) − q| ≤ 0.02 — double the 1% bound the sketch specs pin
-  *     across partitionings, so shuffle-order jitter can never flip it
-  *     while a broken sketch always does (the oracle expects TRUE, so a
+  *     across partitionings, so shuffle-order and compaction jitter
+  *     cannot flip it while a broken sketch does (the oracle expects TRUE, so a
   *     violation hash-mismatches).
   *
   * Rank realization is one broadcast of the 3-value-per-type estimate row

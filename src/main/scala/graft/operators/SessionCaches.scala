@@ -38,7 +38,7 @@ object SessionCaches {
   private val maps = new java.util.WeakHashMap[SparkSession,
     scala.collection.concurrent.TrieMap[String, Any]]()
 
-  private def perSession(s: SparkSession) = maps.synchronized {
+  private[operators] def perSession(s: SparkSession) = maps.synchronized {
     maps.computeIfAbsent(s,
       _ => scala.collection.concurrent.TrieMap.empty[String, Any])
   }
@@ -72,14 +72,19 @@ object SessionCaches {
 
   private def valMemo[V](s: SparkSession, k: String, build: () => V): V = {
     val m = perSession(s)
+    // only memo/modelMemo write val:/model: keys; any other value there
+    // is a caller bug, and serving a fresh holder past it would shadow
+    // the stored entry and rebuild on every call
+    def holderOf(v: Any): ValHolder = v match {
+      case h: ValHolder => h
+      case other => throw new IllegalStateException(
+        s"session cache key '$k' holds a ${other.getClass.getName}, not a memoized value")
+    }
     val holder = m.get(k) match {
-      case Some(h: ValHolder) => h
-      case _ =>
+      case Some(v) => holderOf(v)
+      case None =>
         val fresh = new ValHolder(() => build())
-        m.putIfAbsent(k, fresh) match {
-          case Some(existing: ValHolder) => existing
-          case _ => fresh
-        }
+        m.putIfAbsent(k, fresh).map(holderOf).getOrElse(fresh)
     }
     holder.v.asInstanceOf[V]
   }

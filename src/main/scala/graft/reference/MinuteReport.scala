@@ -65,29 +65,36 @@ object MinuteReport {
     Report(totalEvents, totalErrors, byType, processTime, fileName)
   }
 
-  /** [[analyze]] plus the latency readout a real SRE dashboard wants
-    * beside the counts: p50/p90/p99 of request_latency_ms over the same
-    * minute, still ONE job — the pivot is desugared to a
-    * groupBy(event_type, status) carrying a per-cell KLL sketch next to
-    * each count, the ≤10 cell rows are collected once, and the counts
-    * (zero-filled, explicit-status-list semantics exactly as
-    * [[pivotCounts]]) and the minute-level quantiles (cell sketches
-    * merged driver-side — KLL merge is associative, so cell→minute is
-    * the same re-slice the warehouse rollup view serves) both come from
-    * that single collect. The oracle-gated twin of this grain pattern is
-    * `agg_kll_report_grain` (operators/Kll.scala); sketch accuracy and
-    * tie-safe rank bounds are pinned by KllSketchSpec/QuantileRollupSpec. */
-  def analyzeWithLatency(events: DataFrame, fileName: String,
-      processTime: Double = 0.0): Report = {
-    import org.apache.spark.sql.Encoders
-    import graft.functions.KllSketch
-    val kllVal = org.apache.spark.sql.functions.udaf(
-      new KllSketch.KllFromValues(), Encoders.scalaDouble)
-    val rows = events
+  /** The report's one aggregate: per (event_type, status) cell, the
+    * row count and a built-in KLL sketch of request_latency_ms (≤10
+    * cells for the reference's 5 types × 2 statuses). */
+  def latencyCells(events: DataFrame): DataFrame =
+    events
       .groupBy(col("event_type"), col("status"))
       .agg(count(lit(1)).as("cnt"),
-        kllVal(col("request_latency_ms").cast("double")).as("sk"))
-      .collect()
+        kll_sketch_agg_double(col("request_latency_ms").cast("double"),
+          graft.operators.Kll.K).as("sk"))
+
+  /** [[analyze]] plus the latency readout a real SRE dashboard wants
+    * beside the counts: p50/p90/p99 of request_latency_ms over the same
+    * minute, still ONE job — the pivot is desugared to
+    * [[latencyCells]], the ≤10 cell rows are collected once, and the
+    * counts (zero-filled, explicit-status-list semantics exactly as
+    * [[pivotCounts]]) and the minute-level quantiles both come from
+    * that single collect. The cell sketches are merged on the driver
+    * with the DataSketches classes Spark's own `kll_merge_agg_double`
+    * uses (KLL merge is associative, so cell→minute is the same
+    * re-slice the warehouse rollup view serves) — no second Spark job.
+    * The sketch is randomized: a re-run may return other stored values
+    * within the rank bound, while the counts stay exact. The
+    * oracle-gated twin of this grain pattern is `agg_kll_report_grain`
+    * (operators/Kll.scala); sketch accuracy and tie-safe rank bounds are
+    * pinned by KllSketchSpec/QuantileRollupSpec/MinuteReportSpec. */
+  def analyzeWithLatency(events: DataFrame, fileName: String,
+      processTime: Double = 0.0): Report = {
+    import org.apache.datasketches.kll.KllDoublesSketch
+    import org.apache.datasketches.memory.Memory
+    val rows = latencyCells(events).collect()
     // counts: mirror pivotCounts' explicit value list — only the listed
     // statuses fill cells, but every event_type present appears (zero-
     // filled), and totals derive from the cells as in analyze()
@@ -102,18 +109,15 @@ object MinuteReport {
     // (PivotStatuses): without this, a status outside the explicit list
     // would feed the quantiles while total_events/total_errors exclude
     // it — a silent divergence the moment the status domain grows
-    // (currently vacuous: generator and reference producer emit only
-    // SUCCESS/ERROR, but the report must not depend on that)
-    val listed = rows.filter(r => PivotStatuses.contains(r.getString(1)))
+    // (generator and reference producer emit only SUCCESS/ERROR today;
+    // MinuteReportSpec plants a third status to hold the guard)
+    val merged = KllDoublesSketch.newHeapInstance(graft.operators.Kll.K)
+    rows.filter(r => PivotStatuses.contains(r.getString(1))).foreach { r =>
+      merged.merge(KllDoublesSketch.heapify(Memory.wrap(r.getAs[Array[Byte]]("sk"))))
+    }
     val latency =
-      if (listed.isEmpty) None
-      else {
-        val merged = listed
-          .map(r => KllSketch.deserialize(r.getAs[Array[Byte]]("sk")))
-          .reduce(_.mergeWith(_))
-        if (merged.totalWeight == 0L) None
-        else Some((merged.quantile(0.5), merged.quantile(0.9), merged.quantile(0.99)))
-      }
+      if (merged.isEmpty) None
+      else Some((merged.getQuantile(0.5), merged.getQuantile(0.9), merged.getQuantile(0.99)))
     Report(totalEvents, totalErrors, byType, processTime, fileName, latency)
   }
 

@@ -3,7 +3,8 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.functions.{KllSketch, MisraGries}
+import graft.functions.MisraGries
+import graft.operators.Kll
 
 /** The drift-ALERTING composite over the maintained-view family (round-11
   * verdict "Next round" #8): one streaming health report per event source,
@@ -17,8 +18,8 @@ import graft.functions.{KllSketch, MisraGries}
   *
   * Windows: cells with event_minute < `splitMinute` form the REFERENCE,
   * the rest the CURRENT window. Because every cell is mergeable (KLL
-  * merge is weight-exact; MG merge keeps the n/(k+1) deterministic bound
-  * per the mergeable-summaries theorem), window statistics are cell
+  * merge keeps the exact count; MG merge keeps the n/(k+1) deterministic
+  * bound per the mergeable-summaries theorem), window statistics are cell
   * merges — the same re-slice [[Ingest.upsertQuantileRollup]]'s spec pins
   * at every grain.
   *
@@ -84,27 +85,27 @@ object HealthReport {
     // (Ingest.upsertHeavyHitterRollup's contract): merging k=256
     // summaries through a k=64 merge would silently coarsen the error
     // bound from n/257 to n/65
-    val kllMerge = udaf(new KllSketch.KllMergeAgg(), org.apache.spark.sql.Encoders.BINARY)
     val mgMerge = udaf(new MisraGries.MgMergeAggS(mgK), org.apache.spark.sql.Encoders.BINARY)
     def winOf = when(col("event_minute") < lit(splitMinute), "ref").otherwise("cur")
 
-    // per-(window, type): merged latency sketch + exact count — ≤ 2·|types| rows
+    // per-(window, type): merged latency sketch read out as (p50, p99)
+    // in the same projection + exact count — ≤ 2·|types| rows
     val cells = s.read.parquet(quantileRollupDir)
       .withColumn("win", winOf)
       .groupBy($"win", $"event_type")
-      .agg(kllMerge($"latency_kll").as("sk"), sum($"cnt").as("n"))
+      .agg(kll_merge_agg_double($"latency_kll", Kll.K).as("sk"), sum($"cnt").as("n"))
+      .select($"win", $"event_type",
+        kll_sketch_get_quantile_double($"sk", lit(0.5)),
+        kll_sketch_get_quantile_double($"sk", lit(0.99)), $"n")
       .collect()
       .map(r => (r.getString(0), r.getString(1),
-        r.getAs[Array[Byte]]("sk"), r.getAs[Long]("n")))
+        (r.getDouble(2), r.getDouble(3)), r.getLong(4)))
     val types = cells.map(_._2).distinct.sorted
     val winTotal = cells.groupBy(_._1).view.mapValues(_.map(_._4).sum).toMap
     if (!winTotal.contains("ref") || !winTotal.contains("cur"))
       return s.emptyDataset[Row].toDF()
     val cnt = cells.map(c => (c._1, c._2) -> c._4).toMap.withDefaultValue(0L)
-    val quant = cells.map { c =>
-      val qs = KllSketch.quantilesOf(c._3, Seq(0.5, 0.99))
-      (c._1, c._2) -> (qs(0), qs(1))
-    }.toMap
+    val quant = cells.map(c => (c._1, c._2) -> c._3).toMap
 
     val latencyRows = types.flatMap { t =>
       def row(metric: String, pick: ((Double, Double)) => Double) = {

@@ -304,35 +304,33 @@ object Ingest {
   }
 
   /** The QUANTILE-bearing sibling of [[upsertSketchRollup]]: each minute
-    * cell carries a mergeable KLL latency sketch
-    * ([[graft.functions.KllSketch]]) beside the additive count, so the
-    * maintained view answers percentile questions (p50/p90/p99 of
-    * request_latency_ms) at ANY grain — minute → hour → day: `KllMergeAgg`
-    * over cells — without ever re-touching raw events. This is what the
-    * HLL cell cannot do (distinct counts only) and what the windowed
-    * t-digest stream ([[startWindowedLatencyQuantiles]]) cannot do either
-    * (its window state is transient, not a durable re-sliceable view).
-    * Merge unions the existing cell sketch with the batch's — KLL merge is
-    * associative, weight-exact, and O(k)-bounded, so cost per batch stays
-    * O(batch + touched cells) and state per cell ≤ ~10 KB regardless of
-    * event volume; same batch-id replay caveat as the counts. `cnt`
-    * counts the values actually sketched (non-null latencies).
-    * QuantileRollupSpec asserts the served quantiles stay within the
-    * sketch's rank bound vs exact at every grain, incrementally built. */
+    * cell carries a mergeable built-in KLL latency sketch
+    * (`kll_sketch_agg_double` at [[graft.operators.Kll.K]]) beside the
+    * additive count, so the maintained view answers percentile questions
+    * (p50/p90/p99 of request_latency_ms) at ANY grain — minute → hour →
+    * day: `kll_merge_agg_double` over cells — without ever re-touching
+    * raw events. This is what the HLL cell cannot do (distinct counts
+    * only) and what the windowed stream
+    * ([[startWindowedLatencyQuantiles]]) cannot do either (its window
+    * state is transient, not a durable re-sliceable view). Merge unions
+    * the existing cell sketch with the batch's — KLL merge is
+    * associative, keeps the exact count n, and is O(k)-bounded, so cost
+    * per batch stays O(batch + touched cells) and state per cell stays a
+    * few KB regardless of event volume; same batch-id replay caveat as
+    * the counts. `cnt` counts the values actually sketched (non-null
+    * latencies). QuantileRollupSpec asserts the served quantiles stay
+    * within the sketch's rank bound vs exact at every grain,
+    * incrementally built. */
   def upsertQuantileRollup(batch: DataFrame, rollupDir: String): Unit = {
-    val kllVal = org.apache.spark.sql.functions.udaf(
-      new graft.functions.KllSketch.KllFromValues(),
-      org.apache.spark.sql.Encoders.scalaDouble)
-    val kllMerge = org.apache.spark.sql.functions.udaf(
-      new graft.functions.KllSketch.KllMergeAgg(),
-      org.apache.spark.sql.Encoders.BINARY)
+    val k = graft.operators.Kll.K
     val delta = batch
       .filter(col("request_latency_ms").isNotNull)
       .groupBy(col("event_minute"), col("event_type"))
-      .agg(kllVal(col("request_latency_ms").cast("double")).as("latency_kll"),
+      .agg(kll_sketch_agg_double(col("request_latency_ms").cast("double"), k)
+        .as("latency_kll"),
         count(lit(1)).as("cnt"))
     mergeMinuteRollup(delta, rollupDir, Seq("event_minute", "event_type"),
-      Seq(kllMerge(col("latency_kll")).as("latency_kll"),
+      Seq(kll_merge_agg_double(col("latency_kll"), k).as("latency_kll"),
         sum(col("cnt")).as("cnt")))
   }
 
@@ -1025,21 +1023,19 @@ object Ingest {
       queryName)
   }
 
-  /** Windowed latency quantiles: per 1-hour tumbling window, a t-digest
-    * of request_latency_ms read out as p50/p90/p99 — the streaming twin
-    * of the batch agg_tdigest_quantiles, and the shape a latency SLO
-    * monitor wants: per-window state is the ~1.6 KB centroid list (the
-    * udaf wraps the same Aggregator, so partials merge map-side), never
-    * the window's raw latencies. Beside the windowed CMS (frequencies)
-    * this completes the bounded-state sketch pair in-stream. */
+  /** Windowed latency quantiles: per 1-hour tumbling window,
+    * `percentile_approx` of request_latency_ms read out as p50/p90/p99 —
+    * the streaming twin of the batch agg_tdigest_check, and the shape a
+    * latency SLO monitor wants: per-window state is the bounded
+    * approximate-percentile summary (partials merge map-side), never the
+    * window's raw latencies. Beside the windowed CMS (frequencies) this
+    * completes the bounded-state sketch pair in-stream. */
   def startWindowedLatencyQuantiles(events: DataFrame, queryName: String): StreamingQuery = {
-    val td = org.apache.spark.sql.functions.udaf(
-      new graft.functions.TDigestAggregator.TDigest(),
-      org.apache.spark.sql.Encoders.scalaDouble)
     startLatestToMemory(
       events
         .groupBy(window(col("event_timestamp"), "1 hour"))
-        .agg(td(col("request_latency_ms").cast("double")).as("qs"))
+        .agg(percentile_approx(col("request_latency_ms").cast("double"),
+          typedlit(Seq(0.5, 0.9, 0.99)), lit(10000)).as("qs"))
         .select(col("window.start").as("hour_start"),
           element_at(col("qs"), 1).as("p50"),
           element_at(col("qs"), 2).as("p90"),

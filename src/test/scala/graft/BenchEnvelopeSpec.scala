@@ -255,4 +255,11 @@ class BenchEnvelopeSpec extends AnyFunSuite {
     val tinyAbs = Seq(("a", 0.03, 0.065), ("b", 0.03, 0.068))
     assert(!Bench.hostContended(1.0, 32, tinyAbs))
   }
+
+  test("cpuTicksOf: a cpu line without the steal column reads steal -1") {
+    // 7 counters (user nice system idle iowait irq softirq): no steal
+    assert(Bench.cpuTicksOf("cpu  100 0 50 800 30 5 15") === ((30L, -1L, 1000L)))
+    // with steal (8th counter) the value passes through
+    assert(Bench.cpuTicksOf("cpu  100 0 50 800 30 5 15 40 0 0") === ((30L, 40L, 1040L)))
+  }
 }

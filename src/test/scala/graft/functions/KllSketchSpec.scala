@@ -1,13 +1,20 @@
 package graft.functions
 
-import graft.SparkSuite
+import org.apache.datasketches.kll.KllDoublesSketch
+import org.apache.datasketches.memory.Memory
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.functions._
 
-/** Bounds for the KLL quantile sketch: rank error vs exact quantiles,
+import graft.SparkSuite
+import graft.operators.Kll
+
+/** Bounds for Spark's built-in KLL sketch at the engine's k
+  * ([[graft.operators.Kll.K]]): rank error vs exact quantiles,
   * mergeability across partitionings and across serialized cells, exact
-  * weight preservation, bounded state, and serialization round-trip.
-  * The registered queries (agg_kll_check, agg_kll_rollup_grains) carry
-  * the 2% realized-rank oracle guard; this spec pins the tighter 1%
-  * engineering bound the guard is derived from. */
+  * counts, and bounded state. The registered queries (agg_kll_check,
+  * agg_kll_rollup_grains, agg_kll_report_grain) carry the 2%
+  * realized-rank oracle guard; this spec pins the tighter 1% engineering
+  * bound the guard is derived from. */
 class KllSketchSpec extends SparkSuite {
 
   import spark.implicits._
@@ -19,34 +26,38 @@ class KllSketchSpec extends SparkSuite {
   // values, so it can drift by the tie multiplicity even for an exact
   // discrete quantile)
 
+  private def valueFrame: DataFrame =
+    graft.Tables.events(spark, Sf).select($"value").na.drop()
+
   private def values: Array[Double] =
-    graft.Tables.events(spark, Sf)
-      .select($"value").na.drop().as[Double].collect().sorted
+    valueFrame.as[Double].collect().sorted
+
+  private def sketch(v: Column): Column = kll_sketch_agg_double(v, Kll.K)
+
+  /** The probes read off a one-row frame's sketch column `sk`. */
+  private def quantiles(df: DataFrame): Seq[Double] =
+    df.select(kll_sketch_get_quantile_double($"sk", typedlit(Probes)))
+      .head().getSeq[Double](0)
 
   test("estimates land within 1% rank error of exact quantiles") {
     val sorted = values
-    val sk = new KllSketch.Sketch(KllSketch.DefaultK)
-    sorted.foreach(sk.add)
-    for (q <- Probes) {
-      val e = rankIntervalDist(sorted, sk.quantile(q), q)
+    val qs = quantiles(valueFrame.agg(sketch($"value").as("sk")))
+    for ((q, est) <- Probes.zip(qs)) {
+      val e = rankIntervalDist(sorted, est, q)
       assert(e <= 0.01, s"q=$q rank-dist=$e")
     }
   }
 
   test("estimates are real stored input values (discrete, never interpolated)") {
-    val sorted = values
-    val set = sorted.toSet
-    val sk = new KllSketch.Sketch(KllSketch.DefaultK)
-    sorted.foreach(sk.add)
-    for (q <- Probes) assert(set.contains(sk.quantile(q)))
+    val set = values.toSet
+    val qs = quantiles(valueFrame.agg(sketch($"value").as("sk")))
+    for (est <- qs) assert(set.contains(est), s"est=$est")
   }
 
   test("distributed sketches agree across partitionings within the bound") {
-    val ds = graft.Tables.events(spark, Sf).select($"value").na.drop().as[Double]
     val sorted = values
     val qsByPartitioning = Seq(1, 13).map { p =>
-      ds.repartition(p)
-        .select(new KllSketch.KllQuantiles().toColumn).head()
+      quantiles(valueFrame.repartition(p).agg(sketch($"value").as("sk")))
     }
     for (qs <- qsByPartitioning; (q, est) <- Probes.zip(qs))
       assert(rankIntervalDist(sorted, est, q) <= 0.01,
@@ -55,45 +66,48 @@ class KllSketchSpec extends SparkSuite {
 
   test("merge preserves total weight exactly and keeps the rank bound") {
     val sorted = values
-    val (lo, hi) = sorted.splitAt(sorted.length / 3) // uneven, sorted halves:
-    // a worst-ish case for merge (disjoint value ranges, unequal sizes)
-    val a = new KllSketch.Sketch(KllSketch.DefaultK)
-    val b = new KllSketch.Sketch(KllSketch.DefaultK)
-    lo.foreach(a.add)
-    hi.reverse.foreach(b.add)
-    val m = a.mergeWith(b)
-    assert(m.n === sorted.length.toLong)
-    assert(m.totalWeight === sorted.length.toLong,
-      "compaction/merge must preserve total weight exactly")
-    for (q <- Probes)
-      assert(rankIntervalDist(sorted, m.quantile(q), q) <= 0.01, s"q=$q")
+    // uneven, disjoint value ranges: a worst-ish case for merge
+    val cut = sorted(sorted.length / 3)
+    val halves = valueFrame
+      .groupBy(($"value" < cut).as("lo"))
+      .agg(sketch($"value").as("sk"))
+    val m = halves.agg(kll_merge_agg_double($"sk", Kll.K).as("sk"))
+    assert(m.select(kll_sketch_get_n_double($"sk")).head().getLong(0) ===
+      sorted.length.toLong, "merge must keep the exact count")
+    for ((q, est) <- Probes.zip(quantiles(m)))
+      assert(rankIntervalDist(sorted, est, q) <= 0.01, s"q=$q")
   }
 
   test("serialized cells merge to the same answers as live sketches") {
     val sorted = values
-    // 7 cells, round-robin — the maintained-view shape
-    val cells = Array.fill(7)(new KllSketch.Sketch(KllSketch.DefaultK))
-    sorted.zipWithIndex.foreach { case (v, i) => cells(i % 7).add(v) }
-    val merged = cells
-      .map(c => KllSketch.deserialize(c.serialize()))
-      .reduce(_.mergeWith(_))
-    assert(merged.n === sorted.length.toLong)
+    // 7 round-robin cells — the maintained-view shape — collected as
+    // bytes and merged on the driver, the minute report's merge path
+    val cells = valueFrame
+      .withColumn("cell", monotonically_increasing_id() % 7)
+      .groupBy($"cell").agg(sketch($"value").as("sk"))
+      .as[(Long, Array[Byte])].collect().map(_._2)
+    assert(cells.length === 7)
+    val merged = KllDoublesSketch.newHeapInstance(Kll.K)
+    cells.foreach(c => merged.merge(KllDoublesSketch.heapify(Memory.wrap(c))))
+    assert(merged.getN === sorted.length.toLong)
     for (q <- Probes)
-      assert(rankIntervalDist(sorted, merged.quantile(q), q) <= 0.01, s"q=$q")
+      assert(rankIntervalDist(sorted, merged.getQuantile(q), q) <= 0.01, s"q=$q")
   }
 
   test("state stays bounded by k, independent of input size") {
-    def retainedAt(n: Int): Int = {
-      val sk = new KllSketch.Sketch(KllSketch.DefaultK)
-      val rnd = new scala.util.Random(7)
-      (1 to n).foreach(_ => sk.add(rnd.nextGaussian()))
-      assert(sk.totalWeight === n.toLong)
-      sk.retainedItems
+    def bytesAt(n: Long): Int = {
+      val r = spark.range(n).select(randn(7).as("v"))
+        .agg(sketch($"v").as("sk"))
+        .select(length($"sk"), kll_sketch_get_n_double($"sk")).head()
+      assert(r.getLong(1) === n)
+      r.getInt(0)
     }
-    val bound = 3 * KllSketch.DefaultK // Σ k·(2/3)^d ≤ 3k
-    val at100k = retainedAt(100000)
-    assert(at100k <= bound, s"$at100k items retained")
-    assert(retainedAt(1000000) <= bound) // 10x the data, same bound
+    // ≤ 3k retained doubles (Σ k·(2/3)^d), plus the 8-item floor of
+    // each of ≤ 30 levels, plus the preamble
+    val bound = 8 * (3 * Kll.K + 8 * 30) + 64
+    val at100k = bytesAt(100000)
+    assert(at100k <= bound, s"$at100k bytes")
+    assert(bytesAt(1000000) <= bound) // 10x the data, same bound
   }
 
   test("report-grain guard holds at every day×type cell") {
@@ -108,20 +122,5 @@ class KllSketchSpec extends SparkSuite {
         r.getAs[Double]("p90_exact"), r.getAs[Double]("p99_exact"))
       assert(p50 <= p90 && p90 <= p99, r.toString)
     }
-  }
-
-  test("deterministic for a fixed input order; round-trips serialization") {
-    val rnd = new scala.util.Random(11)
-    val xs = Array.fill(50000)(rnd.nextDouble())
-    def build(): KllSketch.Sketch = {
-      val sk = new KllSketch.Sketch(KllSketch.DefaultK)
-      xs.foreach(sk.add)
-      sk
-    }
-    val a = build().serialize()
-    val b = build().serialize()
-    assert(java.util.Arrays.equals(a, b), "same input order must give identical state")
-    val rt = KllSketch.deserialize(a)
-    assert(java.util.Arrays.equals(rt.serialize(), a))
   }
 }

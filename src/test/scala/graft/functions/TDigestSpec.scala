@@ -1,12 +1,15 @@
 package graft.functions
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
+
 import graft.SparkSuite
 
-/** Bounds for the t-digest quantile sketch: rank error vs exact
-  * quantiles, mergeability across partitionings, bounded state. The raw
-  * estimate surface (valueTdigestQuantiles) is spec-only API; the
-  * registered, fully oracle-checked entry is agg_tdigest_check
-  * (QuantileGuard rank-guarded twin). This spec pins the tighter 1%
+/** Bounds for the built-in `percentile_approx` behind the registered
+  * agg_tdigest_check (the name predates the move to the built-in):
+  * rank error vs exact quantiles, agreement across partitionings, and
+  * exact answers on tiny inputs. The registered query is the
+  * QuantileGuard rank-guarded twin; this spec pins the tighter 1%
   * engineering bound the guard is derived from. */
 class TDigestSpec extends SparkSuite {
 
@@ -19,62 +22,49 @@ class TDigestSpec extends SparkSuite {
   // values, so it can drift by the tie multiplicity even for an exact
   // discrete quantile)
 
+  private def valueFrame: DataFrame =
+    graft.Tables.events(spark, Sf).select($"value").na.drop()
+
   private def values: Array[Double] =
-    graft.Tables.events(spark, Sf)
-      .select($"value").na.drop().as[Double].collect().sorted
+    valueFrame.as[Double].collect().sorted
+
+  private def approx(df: DataFrame, probes: Seq[Double]): Seq[Double] =
+    df.agg(percentile_approx(col(df.columns.head), typedlit(probes), lit(10000)))
+      .head().getSeq[Double](0)
 
   test("estimates land within 1% rank error of exact quantiles") {
     val sorted = values
-    val est = sorted.indices.foldLeft(new TDigestAggregator.Digest(100.0)) {
-      (d, i) => d.add(sorted(i)); d
-    }
-    for (q <- Probes) {
-      val e = rankIntervalDist(sorted, est.quantile(q), q)
+    for ((q, est) <- Probes.zip(approx(valueFrame, Probes))) {
+      val e = rankIntervalDist(sorted, est, q)
       assert(e <= 0.01, s"q=$q rank-dist=$e")
     }
   }
 
   test("distributed digests agree across partitionings within the bound") {
-    val ds = graft.Tables.events(spark, Sf).select($"value").na.drop().as[Double]
     val sorted = values
-    val qsByPartitioning = Seq(1, 13).map { p =>
-      ds.repartition(p)
-        .select(new TDigestAggregator.TDigest().toColumn).head()
-    }
+    val qsByPartitioning = Seq(1, 13).map(p => approx(valueFrame.repartition(p), Probes))
     for (qs <- qsByPartitioning; (q, est) <- Probes.zip(qs))
       assert(rankIntervalDist(sorted, est, q) <= 0.01,
         s"q=$q est=$est rank-dist=${rankIntervalDist(sorted, est, q)}")
   }
 
-  test("state stays bounded by the compression, independent of input size") {
-    def centroidsAt(n: Int): Int = {
-      val d = new TDigestAggregator.Digest(100.0)
-      val rnd = new scala.util.Random(7)
-      (1 to n).foreach(_ => d.add(rnd.nextGaussian()))
-      assert(d.totalWeight === n.toDouble)
-      d.nCentroids
-    }
-    val at100k = centroidsAt(100000)
-    assert(at100k <= 100, s"$at100k centroids") // k-span δ/2, span-1 clusters
-    assert(centroidsAt(1000000) <= 100)         // 10x the data, same bound
-  }
-
   test("quantiles are monotone in q and exact on tiny inputs") {
-    val d = new TDigestAggregator.Digest(100.0)
-    Seq(3.0, 1.0, 2.0).foreach(d.add)
-    // 3 points → 3 centroids; centers at ranks 1/6, 3/6, 5/6
-    assert(d.quantile(0.5) === 2.0)
-    assert(d.quantile(0.0) === 1.0 && d.quantile(1.0) === 3.0)
-    val qs = (0 to 20).map(i => d.quantile(i / 20.0))
+    val tiny = Seq(3.0, 1.0, 2.0).toDF("v")
+    assert(approx(tiny, Seq(0.0, 0.5, 1.0)) === Seq(1.0, 2.0, 3.0))
+    val qs = approx(tiny, (0 to 20).map(_ / 20.0))
     assert(qs === qs.sorted)
   }
 
   test("registered per-type query emits one bounded row per event type") {
-    val out = graft.operators.EventOps.valueTdigestQuantiles(spark, Sf)
-      .as[(String, Double, Double, Double)].collect().toSeq
+    val out = graft.operators.EventOps.tdigestCheck(spark, Sf).collect().toSeq
     val types = graft.Tables.events(spark, Sf)
       .select($"event_type").distinct().as[String].collect().toSet
-    assert(out.map(_._1).toSet === types)
-    assert(out.forall(r => r._2 <= r._3 && r._3 <= r._4))
+    assert(out.map(_.getAs[String]("event_type")).toSet === types)
+    assert(out.size === types.size)
+    for (r <- out) {
+      assert(r.getAs[Int]("within_rank_bound") == 1, r.toString)
+      assert(r.getAs[Double]("p50_exact") <= r.getAs[Double]("p90_exact") &&
+        r.getAs[Double]("p90_exact") <= r.getAs[Double]("p99_exact"), r.toString)
+    }
   }
 }

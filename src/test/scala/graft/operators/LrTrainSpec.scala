@@ -111,6 +111,26 @@ class LrTrainSpec extends SparkSuite {
       ((n, a, b, c, dd, kappaMicro)))
   }
 
+  test("kappa: a NULL-text document counts in no cell and not in n") {
+    import org.apache.spark.sql.Row
+    import scala.jdk.CollectionConverters._
+    val dir = tmpDir("lr-null-text")
+    val long = Seq.tabulate(60)(i => s"w$i").mkString(" ") // >= 200 chars
+    val texts = Seq("a b c", long, "the quick brown fox", null, long + " z", "x y")
+    val rows = texts.zipWithIndex.map { case (t, i) =>
+      Row(i.toLong, t, "en", "web", Option(t).map(_.length.toLong).getOrElse(0L))
+    }
+    val schema = org.apache.spark.sql.types.StructType(
+      graft.Tables.documentsSchema.fields.map(_.copy(nullable = true)))
+    spark.createDataFrame(rows.asJava, schema)
+      .write.parquet(s"$dir/documents.parquet")
+    val r = LrTrain.agreementKappa(spark, dir).head()
+    val n = r.getAs[Long]("n")
+    assert(n === texts.count(_ != null).toLong)
+    assert(n === r.getAs[Long]("both_accept") + r.getAs[Long]("rule_only") +
+      r.getAs[Long]("lr_only") + r.getAs[Long]("both_reject"))
+  }
+
   test("calibration deciles + ECE match a plain-Scala recompute from the scores") {
     // per-doc (p4, y) from the scored output is ground truth; the
     // calibration table must be exactly the decile census over it

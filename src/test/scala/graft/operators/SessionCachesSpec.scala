@@ -195,4 +195,17 @@ class SessionCachesSpec extends SparkSuite {
       "clear must delete the failed build's dir")
     assert(SessionCaches.size(spark) == 0)
   }
+
+  test("memo: a raw value planted under a val: key fails loudly, never shadows") {
+    val s = spark.newSession() // isolate from other suites' registry state
+    val builds = new AtomicInteger(0)
+    SessionCaches.perSession(s).put("val:planted", "raw-string")
+    val e = intercept[IllegalStateException] {
+      SessionCaches.memo(s, "planted") { builds.incrementAndGet(); 1 }
+    }
+    assert(e.getMessage.contains("val:planted"), e.getMessage)
+    assert(builds.get() == 0, "a non-holder entry must not trigger a rebuild")
+    assert(SessionCaches.perSession(s).get("val:planted").contains("raw-string"))
+    SessionCaches.clear(s)
+  }
 }

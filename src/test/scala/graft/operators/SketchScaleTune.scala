@@ -5,9 +5,9 @@ import org.apache.spark.sql.functions._
 /** SCALE_NOTES Leg 8 measurement (run manually, results recorded there):
   * the round-5 sketch/compression additions at scale.
   *
-  *  - t-digest over 10M values: one-pass bounded-state quantiles vs the
-  *    exact full-sort percentile and the built-in approx_percentile —
-  *    wall-time plus worst rank error of the three probes.
+  *  - quantiles over 10M values: the exact full-sort percentile vs the
+  *    built-in approx_percentile — wall-time plus worst rank error of
+  *    the three probes.
   *  - SQ8 vs float embeddings at sf0.1: stored index bytes on disk
   *    (compression ratio) and the scored-scan wall-time vs the float
   *    brute-force scan.
@@ -21,7 +21,7 @@ object SketchScaleTune {
       val t0 = System.nanoTime(); val a = f; (a, (System.nanoTime() - t0) / 1e9)
     }
 
-    // ---- t-digest at 10M values (deterministic skewed distribution) ----
+    // ---- quantiles at 10M values (deterministic skewed distribution) ----
     val n = 10000000L
     val vals = spark.range(n)
       .select((pmod(xxhash64($"id"), lit(100000)).cast("double") / 100
@@ -29,10 +29,6 @@ object SketchScaleTune {
       .localCheckpoint()
     val probes = Seq(0.5, 0.9, 0.99)
 
-    val (tdQs, tdT) = time {
-      vals.select($"v").as[Double].select(
-        new graft.functions.TDigestAggregator.TDigest().toColumn).head()
-    }
     val (exactQs, exactT) = time {
       vals.select(expr(s"percentile(v, array(${probes.mkString(",")}))"))
         .head().getSeq[Double](0)
@@ -47,7 +43,6 @@ object SketchScaleTune {
         val below = vals.filter($"v" <= e).count().toDouble / n
         math.abs(below - q)
       }.max
-    println(f"[sketchscale] tdigest 10M: ${tdT}%.2f s, worst rank err ${rankErr(tdQs)}%.5f")
     println(f"[sketchscale] exact percentile 10M: ${exactT}%.2f s (rank err 0 by definition)")
     println(f"[sketchscale] approx_percentile 10M: ${approxT}%.2f s, worst rank err ${rankErr(approxQs)}%.5f")
 

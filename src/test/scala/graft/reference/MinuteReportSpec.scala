@@ -107,6 +107,25 @@ class MinuteReportSpec extends SparkSuite {
         s"q=$q est=$est")
   }
 
+  test("analyzeWithLatency: a status outside PivotStatuses feeds neither counts nor latency") {
+    import org.apache.spark.sql.functions.lit
+    val ev = Events.generate(spark, 3000, 1704067200000L, intervalMs = 10)
+    // far above the generator's 1500 ms ceiling, and 10% of the rows: if
+    // these cells reached the merged sketch, p99 would land on them
+    val outlierMs = 60000
+    val timeouts = ev.limit(300)
+      .withColumn("status", lit("TIMEOUT"))
+      .withColumn("request_latency_ms", lit(outlierMs))
+    val base = MinuteReport.analyzeWithLatency(ev, "g.parquet")
+    val r = MinuteReport.analyzeWithLatency(ev.unionByName(timeouts), "g.parquet")
+    assert(base.totalEvents == 3000)
+    assert(r.totalEvents == base.totalEvents)
+    assert(r.totalErrors == base.totalErrors)
+    assert(r.byEventType == base.byEventType)
+    val (_, _, p99) = r.latencyMs.get
+    assert(p99 < outlierMs, s"p99=$p99 must not see the TIMEOUT cells")
+  }
+
   test("analyzeWithLatency: empty input omits the latency block") {
     val empty = spark.createDataFrame(
       java.util.Collections.emptyList[Row](), Events.schema)

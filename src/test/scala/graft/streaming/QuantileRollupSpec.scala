@@ -1,14 +1,13 @@
 package graft.streaming
 
-import org.apache.spark.sql.Encoders
 import org.apache.spark.sql.functions._
 
 import graft.SparkSuite
-import graft.functions.KllSketch
+import graft.operators.Kll
 import graft.reference.Events
 
 /** The quantile-bearing maintained view (Ingest.upsertQuantileRollup):
-  * incrementally-built KLL cells must serve latency percentiles within
+  * incrementally-built built-in KLL cells must serve latency percentiles within
   * the sketch's rank bound at EVERY grain — per-minute (cell as built),
   * per-type (cells merged across minutes), and global (all cells) — and
   * the counts must stay exact, all measured against the raw events the
@@ -43,17 +42,17 @@ class QuantileRollupSpec extends SparkSuite {
       .as[(java.sql.Timestamp, String, Long)].collect().toSet
     assert(gotCnt == expCnt)
 
-    val kllMerge = udaf(new KllSketch.KllMergeAgg(), Encoders.BINARY)
     // served-vs-exact at a grain defined by `keyCols`; tolerance 2% — the
     // oracle-guard bound — because cells here are tiny (≤ ~60 values), so
     // the coarse-grain merge bound, not the asymptotic 1%, is what applies
     def checkGrain(keyCols: Seq[String]): Unit = {
       val served = view.groupBy(keyCols.map(col): _*)
-        .agg(kllMerge($"latency_kll").as("sk"))
+        .agg(kll_merge_agg_double($"latency_kll", Kll.K).as("sk"))
+        .withColumn("qs", kll_sketch_get_quantile_double($"sk", typedlit(Seq(0.5, 0.9))))
         .collect()
         .map { r =>
           val key = keyCols.map(r.getAs[Any]).mkString("|")
-          key -> KllSketch.quantilesOf(r.getAs[Array[Byte]]("sk"), Seq(0.5, 0.9))
+          key -> r.getSeq[Double](r.fieldIndex("qs"))
         }.toMap
       val raw = all.filter($"request_latency_ms".isNotNull)
         .select(keyCols.map(col) :+ $"request_latency_ms".cast("double").as("v"): _*)
@@ -80,15 +79,13 @@ class QuantileRollupSpec extends SparkSuite {
     Ingest.upsertQuantileRollup(b1, dir)
     Ingest.upsertQuantileRollup(b2, dir)
     val view = spark.read.parquet(dir)
-    // total weight inside each cell sketch equals the cell's cnt — proof
-    // the second batch merged (weight-exactness) rather than overwrote
-    val cells = view.select($"latency_kll", $"cnt").collect()
+    // the count n inside each cell sketch equals the cell's cnt — proof
+    // the second batch merged (n is exact) rather than overwrote
+    val cells = view.select(kll_sketch_get_n_double($"latency_kll"), $"cnt")
+      .as[(Long, Long)].collect()
     assert(cells.nonEmpty)
-    for (r <- cells) {
-      val sk = KllSketch.deserialize(r.getAs[Array[Byte]]("latency_kll"))
-      assert(sk.totalWeight === r.getAs[Long]("cnt"),
-        "cell sketch weight must equal the merged count")
-    }
+    for ((n, cnt) <- cells)
+      assert(n === cnt, "cell sketch n must equal the merged count")
     val totalCnt = view.agg(sum($"cnt")).head().getLong(0)
     val exact = b1.unionByName(b2).filter($"request_latency_ms".isNotNull).count()
     assert(totalCnt === exact)
