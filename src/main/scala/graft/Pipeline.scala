@@ -17,8 +17,8 @@ import graft.streaming.Ingest
   *      stream (or [[Ingest.eventStream]]'s generator) checkpointed into
   *      the minute-partitioned warehouse, exactly-once.
   *   2. [[minutelyReport]] — Airflow-extract + Spark-job legs: pruned
-  *      single-minute read, pivot report, JSON to the report sink, with
-  *      the reference's no-data sentinel and Tehran file naming.
+  *      single-minute read, [[MinuteReport.reportJson]] to the report
+  *      sink, with the reference's no-data sentinel and Tehran naming.
   *   3. Query surface — [[SparkEntry.queries]] for everything else.
   */
 object Pipeline {
@@ -35,8 +35,9 @@ object Pipeline {
 
   /** Run the minutely analysis for the minute preceding `triggerInstant`
     * (the reference's cron semantics, pipeline.py:130-131), write the JSON
-    * report to `reportDir`, and return the JSON. Zero rows for the minute
-    * produce the reference's `No data for {name}.` sentinel (P6). */
+    * report to `reportDir/<name>` (a re-run replaces it), and return the
+    * JSON — the same document [[Scheduler.minutelySteps]] emits. Zero rows
+    * for the minute produce the `No data for {name}.` sentinel (P6). */
   def minutelyReport(
       spark: SparkSession,
       warehouseDir: String,
@@ -46,19 +47,8 @@ object Pipeline {
     val minute = java.sql.Timestamp.from(
       triggerInstant.truncatedTo(java.time.temporal.ChronoUnit.MINUTES)
         .minusSeconds(60))
-    val t0 = System.nanoTime()
-    val extracted = Warehouse.readMinute(spark, warehouseDir, minute)
-    // one pass: analyzeWithLatency() collects the (≤10-row) count+sketch
-    // cells once — the reference report plus the p50/p90/p99 latency
-    // readout — and zero totals mean the minute had no rows, so there is
-    // no separate isEmpty job
-    val report = MinuteReport.analyzeWithLatency(extracted, fileName,
-      processTime = (System.nanoTime() - t0) / 1e9)
-    val json =
-      if (report.totalEvents == 0L) {
-        // the reference signals "no data" with an extension-less name
-        MinuteReport.noDataJson(fileName.stripSuffix(".parquet"))
-      } else MinuteReport.toJson(report)
+    val json = MinuteReport.reportJson(
+      Warehouse.readMinute(spark, warehouseDir, minute), fileName)
     Warehouse.writeReportJson(spark, json, s"$reportDir/${fileName.stripSuffix(".parquet")}")
     json
   }

@@ -102,7 +102,9 @@ object Scheduler {
     * backfills every missed minute. The interval for a tick at minute M
     * is M-1 → M, identified by its start M-1 (`data_interval_start`,
     * pipeline.py:110 — which is why [[Pipeline.minutelyReport]] reads
-    * `trigger minus one minute`). Returns interval STARTS, ascending. */
+    * `trigger minus one minute`). Returns interval STARTS, ascending.
+    * A completed interval is never owed again: late rows for a reported
+    * minute reach its report only through an explicit re-run. */
   def dueIntervals(
       lastCompleted: Option[Instant], now: Instant,
       catchup: Boolean): Seq[Instant] = {
@@ -149,9 +151,10 @@ object Scheduler {
     *     the landed path, or — the reference's no-data signal — the bare
     *     extension-less file name when the minute had no rows
     *     (pipeline.py:131-140).
-    *  2. `analyze` — if upstream returned a parquet path, read it back
-    *     and run the pivot analysis; a bare name short-circuits to the
-    *     `No data` sentinel report (pipeline.py:147-152). Returns JSON.
+    *  2. `analyze` — [[reference.MinuteReport.reportForPath]]: a parquet
+    *     path is read back and reported exactly as [[Pipeline.minutelyReport]]
+    *     does; a bare name short-circuits to the `No data` sentinel
+    *     report (pipeline.py:147-152). Returns JSON.
     *  3. `report` — write the JSON to `reportDir` (the dashboard leg).
     */
   def minutelySteps(
@@ -179,21 +182,7 @@ object Scheduler {
         }
       }),
       Step("analyze", { up =>
-        up.map(_.asInstanceOf[String]) match {
-          case Some(p) if p.endsWith(".parquet") =>
-            val t0 = System.nanoTime()
-            // analyzeWithLatency: the reference report plus the p50/p90/
-            // p99 latency readout, additive-only — same as the fused
-            // [[Pipeline.minutelyReport]] path, so both facades emit the
-            // same report document
-            val report = reference.MinuteReport.analyzeWithLatency(
-              spark.read.parquet(p), fileName)
-            reference.MinuteReport.toJson(
-              report.copy(processTime = (System.nanoTime() - t0) / 1e9))
-          case other =>
-            reference.MinuteReport.noDataJson(
-              other.getOrElse(fileName.stripSuffix(".parquet")))
-        }
+        reference.MinuteReport.reportForPath(spark, up.get.asInstanceOf[String])
       }),
       Step("report", { up =>
         val json = up.get.asInstanceOf[String]

@@ -1365,29 +1365,15 @@ object Audit {
     * bit-for-bit via BigDecimal. */
   def dependencyEntropy(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val cols = Seq("o_custkey", "o_orderstatus", "o_orderpriority",
-      "o_year", "o_price_band")
-    val t = Tables.orders(s, d).select(
-      $"o_custkey", $"o_orderstatus", $"o_orderpriority",
-      year($"o_orderdate").cast("long").as("o_year"),
-      floor($"o_totalprice" / lit(50000.0)).cast("long").as("o_price_band"))
-    val nD = t.count().toDouble
+    val cols = EntropyCols
     // grouping_id bit i (from the LEFT of `cols`) is 0 iff that column
     // is grouped — the id is the census's identity, value-independent
     // (a real NULL cell value cannot be confused with an aggregated-away
     // column).
     def gidOf(idxs: Seq[Int]): Long =
       (1L << cols.length) - 1L - idxs.map(i => 1L << (cols.length - 1 - i)).sum
-    val sets: Seq[Seq[Column]] =
-      (for { i <- cols.indices; j <- cols.indices if i < j }
-        yield Seq(col(cols(i)), col(cols(j)))) ++
-        cols.indices.map(i => Seq(col(cols(i))))
-    val p = $"c".cast("double") / lit(nD)
-    val ent = t.groupingSets(sets, cols.map(col): _*)
-      .agg(grouping_id().as("gid"), count(lit(1)).as("c"))
-      .select($"gid", (p * log(p)).cast("decimal(28,8)").as("pl"))
-      .groupBy($"gid").agg(round(-sum($"pl"), 6).cast("double").as("h"))
-      .as[(Long, Double)].collect().toMap
+    val nD = Tables.orders(s, d).count().toDouble
+    val ent = entropyCensus(s, d, nD).as[(Long, Double)].collect().toMap
     // Spark's `cast(decimal(28,8))` on a double goes through the
     // double's shortest decimal rep then HALF_UP to scale 8; `round(_,6)`
     // is HALF_UP again — replay both steps exactly.
@@ -1404,6 +1390,30 @@ object Audit {
       (s"$x -> $y", hx, hy, hxy, q6(hx + hy - hxy), q6((hx + hy - hxy) / hy))
     }
     rows.toDF("fd", "h_x", "h_y", "h_xy", "mi", "u_y_given_x").orderBy($"fd")
+  }
+
+  private val EntropyCols = Seq("o_custkey", "o_orderstatus",
+    "o_orderpriority", "o_year", "o_price_band")
+
+  /** [[dependencyEntropy]]'s distributed job, lazy so its plan can be
+    * inspected: the 15 grouping-sets censuses, each folded to its
+    * entropy `(gid, h)` given the row count `nD`. */
+  private[operators] def entropyCensus(s: SparkSession, d: String, nD: Double): DataFrame = {
+    import s.implicits._
+    val cols = EntropyCols
+    val t = Tables.orders(s, d).select(
+      $"o_custkey", $"o_orderstatus", $"o_orderpriority",
+      year($"o_orderdate").cast("long").as("o_year"),
+      floor($"o_totalprice" / lit(50000.0)).cast("long").as("o_price_band"))
+    val sets: Seq[Seq[Column]] =
+      (for { i <- cols.indices; j <- cols.indices if i < j }
+        yield Seq(col(cols(i)), col(cols(j)))) ++
+        cols.indices.map(i => Seq(col(cols(i))))
+    val p = $"c".cast("double") / lit(nD)
+    t.groupingSets(sets, cols.map(col): _*)
+      .agg(grouping_id().as("gid"), count(lit(1)).as("c"))
+      .select($"gid", (p * log(p)).cast("decimal(28,8)").as("pl"))
+      .groupBy($"gid").agg(round(-sum($"pl"), 6).cast("double").as("h"))
   }
 
   val dependencyEntropyOracle: String = {

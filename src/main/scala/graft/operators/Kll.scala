@@ -89,7 +89,7 @@ object Kll {
     * (day cells hold only tens-to-hundreds of values, where the sketch
     * serves the exact discrete quantile but a flat point-rank bound would
     * be tie-fragile). The facade twin over generated events is
-    * [[graft.reference.MinuteReport.analyzeWithLatency]]. */
+    * [[graft.reference.MinuteReport.analyze]]. */
   def kllReportGrain(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val ev = Tables.events(s, d)

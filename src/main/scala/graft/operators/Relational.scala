@@ -709,9 +709,9 @@ object Relational {
     * EXECUTE the inner equi-join the advisor recommends — broadcast the
     * side that fits, else shuffle, salted by the recommended factor when
     * the hottest key exceeds one even task share. Closes the
-    * readout→remedy loop the same way `analyzeWithLatency` did for the
-    * report: the census that told you the join was dangerous is the same
-    * code that now makes it safe. Result is provably identical to the
+    * readout→remedy loop the same way the minute report's latency
+    * readout did: the census that told you the join was dangerous is the
+    * same code that now makes it safe. Result is provably identical to the
     * plain inner join on `key` for every strategy (broadcast changes
     * only the exchange; each salted fact row matches exactly the one
     * replica carrying its own salt).

@@ -6,16 +6,18 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The reference's flagship analysis (reference airflow/dags/spark.py:17-46,
-  * 49-98): per-minute success/error report — groupBy(event_type) ×
-  * pivot(status, [ERROR, SUCCESS]) × count, zero-filled, event_type-ordered,
-  * wrapped in a JSON report document with the Tehran-timezone minute file
-  * name (reference airflow/dags/pipeline.py:130-131).
+  * 49-98): per-minute success/error report — event_type × status counts,
+  * zero-filled, plus a latency readout — wrapped in a JSON report document
+  * with the Tehran-timezone minute file name (reference
+  * airflow/dags/pipeline.py:130-131). One analysis ([[analyze]]) and one
+  * JSON assembly ([[reportJson]]) serve Pipeline, the Scheduler's analyze
+  * step and the streaming dashboard leg.
   *
   * Differences from the reference, by design (SURVEY.md §7.4):
   *  - single pass: the reference runs 4 separate actions over a cached scan
-  *    (count / pivot / sum / collect, spark.py:24-37); we collect the ≤5
-  *    pivoted rows once and derive total_events and total_errors from the
-  *    cells (A1 = Σ cells, A5 = Σ ERROR column) — same numbers, one job;
+  *    (count / pivot / sum / collect, spark.py:24-37); we collect the ≤10
+  *    count+sketch cells once and derive total_events and total_errors from
+  *    them (A1 = Σ cells, A5 = Σ ERROR column) — same numbers, one job;
   *  - in-JVM report assembly, no Py4J / S3A hop.
   */
 object MinuteReport {
@@ -31,12 +33,15 @@ object MinuteReport {
       latencyMs: Option[(Double, Double, Double)] = None) // (p50, p90, p99)
 
   /** The explicit status domain of the reference pivot (spark.py:27-32).
-    * Shared by [[pivotCounts]] and [[analyzeWithLatency]] so counts and
-    * latency quantiles always cover the SAME rows. */
+    * Shared by [[pivotCounts]] and [[analyze]] so the registered pivot
+    * query and the report's cells cover the SAME rows. */
   val PivotStatuses: Seq[String] = Seq("ERROR", "SUCCESS")
 
   /** The pivot aggregation itself (reference spark.py:27-32): explicit
-    * status value list, absent combos zero-filled, deterministic order. */
+    * status value list, absent combos zero-filled, deterministic order.
+    * The plan of the oracle-gated `ref_minute_report`; the report's own
+    * counts come from [[latencyCells]] with the same semantics
+    * (ReportPropertySpec pins the two equal). */
   def pivotCounts(events: DataFrame): DataFrame =
     events
       .groupBy(col("event_type"))
@@ -44,26 +49,6 @@ object MinuteReport {
       .count()
       .na.fill(0)
       .orderBy(col("event_type"))
-
-  /** Restrict to one minute. Over a warehouse laid out with
-    * `partitionBy("event_minute")` this is a metadata-only partition prune
-    * (reference relies on ClickHouse minute partitioning the same way,
-    * ARCHITECTURE.md:30). */
-  def forMinute(events: DataFrame, minute: java.sql.Timestamp): DataFrame =
-    events.filter(date_trunc("minute", col("event_timestamp")) === lit(minute))
-
-  /** Build the full report in one pass over ≤5 pivoted rows. */
-  def analyze(events: DataFrame, fileName: String, processTime: Double = 0.0): Report = {
-    val rows = pivotCounts(events).collect()
-    val byType = rows.map { r =>
-      val err = r.getLong(r.fieldIndex("ERROR"))
-      val suc = r.getLong(r.fieldIndex("SUCCESS"))
-      r.getString(0) -> (suc, err)
-    }.toMap
-    val totalErrors = byType.values.map(_._2).sum
-    val totalEvents = byType.values.map { case (s, e) => s + e }.sum
-    Report(totalEvents, totalErrors, byType, processTime, fileName)
-  }
 
   /** The report's one aggregate: per (event_type, status) cell, the
     * row count and a built-in KLL sketch of request_latency_ms (≤10
@@ -75,12 +60,12 @@ object MinuteReport {
         kll_sketch_agg_double(col("request_latency_ms").cast("double"),
           graft.operators.Kll.K).as("sk"))
 
-  /** [[analyze]] plus the latency readout a real SRE dashboard wants
-    * beside the counts: p50/p90/p99 of request_latency_ms over the same
-    * minute, still ONE job — the pivot is desugared to
-    * [[latencyCells]], the ≤10 cell rows are collected once, and the
-    * counts (zero-filled, explicit-status-list semantics exactly as
-    * [[pivotCounts]]) and the minute-level quantiles both come from
+  /** The minute report: the reference's pivot counts plus the latency
+    * readout a real SRE dashboard wants beside them (p50/p90/p99 of
+    * request_latency_ms over the same rows), in ONE job — the pivot is
+    * desugared to [[latencyCells]], the ≤10 cell rows are collected once,
+    * and the counts (zero-filled, explicit-status-list semantics exactly
+    * as [[pivotCounts]]) and the minute-level quantiles both come from
     * that single collect. The cell sketches are merged on the driver
     * with the DataSketches classes Spark's own `kll_merge_agg_double`
     * uses (KLL merge is associative, so cell→minute is the same
@@ -90,14 +75,13 @@ object MinuteReport {
     * oracle-gated twin of this grain pattern is `agg_kll_report_grain`
     * (operators/Kll.scala); sketch accuracy and tie-safe rank bounds are
     * pinned by KllSketchSpec/QuantileRollupSpec/MinuteReportSpec. */
-  def analyzeWithLatency(events: DataFrame, fileName: String,
-      processTime: Double = 0.0): Report = {
+  def analyze(events: DataFrame, fileName: String): Report = {
     import org.apache.datasketches.kll.KllDoublesSketch
     import org.apache.datasketches.memory.Memory
     val rows = latencyCells(events).collect()
     // counts: mirror pivotCounts' explicit value list — only the listed
     // statuses fill cells, but every event_type present appears (zero-
-    // filled), and totals derive from the cells as in analyze()
+    // filled), and totals derive from the cells
     val byType = rows.groupBy(_.getString(0)).map { case (t, rs) =>
       def cnt(st: String) =
         rs.find(_.getString(1) == st).map(_.getAs[Long]("cnt")).getOrElse(0L)
@@ -118,7 +102,7 @@ object MinuteReport {
     val latency =
       if (merged.isEmpty) None
       else Some((merged.getQuantile(0.5), merged.getQuantile(0.9), merged.getQuantile(0.99)))
-    Report(totalEvents, totalErrors, byType, processTime, fileName, latency)
+    Report(totalEvents, totalErrors, byType, 0.0, fileName, latency)
   }
 
   /** JSON serialization matching the reference report envelope
@@ -133,8 +117,8 @@ object MinuteReport {
       s""""${esc(t)}": {"SUCCESS": $s, "ERROR": $e}"""
     }.mkString("{", ", ", "}")
     // latency_ms is additive-only: the reference keys keep their exact
-    // order and the block appears only when a latency readout was built
-    // (analyzeWithLatency), so reference-shape consumers are unaffected
+    // order and the block appears only when the minute had latency
+    // cells, so reference-shape consumers are unaffected
     val latency = r.latencyMs.map { case (p50, p90, p99) =>
       s""""latency_ms": {"p50": $p50, "p90": $p90, "p99": $p99}, """
     }.getOrElse("")
@@ -148,17 +132,26 @@ object MinuteReport {
   def noDataJson(name: String): String =
     s"""{"report": "No data for $name."}"""
 
-  /** Path-driven entry mirroring reference spark.py main(): a path without
-    * ".parquet" means "no data this minute" — skip analysis entirely. */
+  /** The one report assembly: [[analyze]] `events`, timing the scan,
+    * aggregate and collect as `process_time`, and return the JSON
+    * document — or the no-data sentinel for the extension-less name when
+    * the totals are zero (zero totals mean no rows, so there is no
+    * separate isEmpty job). */
+  def reportJson(events: DataFrame, fileName: String): String = {
+    val t0 = System.nanoTime()
+    val r = analyze(events, fileName)
+    if (r.totalEvents == 0L) noDataJson(fileName.stripSuffix(".parquet"))
+    else toJson(r.copy(processTime = (System.nanoTime() - t0) / 1e9))
+  }
+
+  /** Path-driven entry mirroring reference spark.py main(): a name without
+    * "parquet" means "no data this minute" — skip analysis entirely;
+    * otherwise report the landed file, read with the declared schema (no
+    * inference job). */
   def reportForPath(spark: SparkSession, path: String): String = {
     val name = path.split("/").last
     if (!name.contains("parquet")) noDataJson(name)
-    else {
-      val t0 = System.nanoTime()
-      val df = spark.read.schema(Events.schema).parquet(path)
-      val r = analyze(df, fileName = name)
-      toJson(r.copy(processTime = (System.nanoTime() - t0) / 1e9))
-    }
+    else reportJson(spark.read.schema(Events.schema).parquet(path), name)
   }
 
   /** The reference's minute file naming quirk (pipeline.py:130-131, golden

@@ -69,12 +69,13 @@ object Dashboard {
     resp.statusCode()
   }
 
-  /** The full continuous report leg with the dashboard POST attached:
-    * foreachBatch computes the pivot report, writes the JSON object (S4),
-    * then posts it (S7) — the in-engine twin of the reference's
-    * spark_analysis >> send_to_dashboard task chain. A failed POST fails
-    * the batch, so checkpoint replay re-sends it: at-least-once delivery
-    * to the dashboard, same as an Airflow task retry. */
+  /** The continuous report leg: foreachBatch assembles each micro-batch's
+    * minute report ([[graft.reference.MinuteReport.reportJson]]), writes
+    * the JSON object (S4), then posts it (S7) — the in-engine twin of the
+    * reference's spark_analysis >> send_to_dashboard task chain. A failed
+    * POST fails the batch after the write, so a restart on the same
+    * checkpoint re-writes and re-sends it: at-least-once delivery to the
+    * dashboard, same as an Airflow task retry. */
   def startMinuteReportsToDashboard(
       events: DataFrame,
       reportDir: String,
@@ -86,11 +87,9 @@ object Dashboard {
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
         val analysisPath = s"$reportDir/batch-$batchId.parquet"
-        val report = graft.reference.MinuteReport.analyze(
-          batch, fileName = s"batch-$batchId.parquet")
         graft.sources.Warehouse.writeReportJson(
           batch.sparkSession,
-          graft.reference.MinuteReport.toJson(report),
+          graft.reference.MinuteReport.reportJson(batch, s"batch-$batchId.parquet"),
           jsonPathFor(analysisPath))
         send(batch.sparkSession, analysisPath, apiUrl)
         ()

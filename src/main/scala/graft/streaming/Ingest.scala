@@ -157,33 +157,6 @@ object Ingest {
       .select(col("minute_window.start").as("minute"),
         col("event_type"), col("status"), col("cnt"))
 
-  /** Continuous report leg (reference S7/§3.3 step 4: every minute a JSON
-    * report is pushed to the dashboard): foreachBatch computes the pivot
-    * report over each micro-batch and writes it as a JSON object named by
-    * the batch id. foreachBatch is the idiomatic escape hatch for sinks
-    * Spark lacks (the reference POSTs to a REST API — swap the write for
-    * the HTTP call in deployment; everything else is identical). */
-  def startMinuteReports(
-      events: DataFrame,
-      reportDir: String,
-      checkpointDir: String): StreamingQuery =
-    events.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val report = graft.reference.MinuteReport.analyze(
-          batch, fileName = s"batch-$batchId.parquet")
-        graft.sources.Warehouse.writeReportJson(
-          batch.sparkSession,
-          graft.reference.MinuteReport.toJson(report),
-          // the SAME name Dashboard.jsonPathFor derives from the
-          // analysis path — a report this leg writes must be fetchable
-          // by Dashboard.send without knowing which leg wrote it
-          Dashboard.jsonPathFor(s"$reportDir/batch-$batchId.parquet"))
-      }
-      .start()
-
   /** One incremental-maintenance step of the minute rollup: aggregate the
     * batch, merge with the CURRENT rollup rows of only the touched
     * minute-partitions, and rewrite exactly those partitions (dynamic

@@ -39,4 +39,34 @@ class PipelineSpec extends SparkSuite {
       Instant.parse("2024-01-01T09:00:00Z"))
     assert(empty == """{"report": "No data for 2024-01-01_12-29."}""", empty)
   }
+
+  test("late rows after a minute's report: a re-run with the same trigger overwrites it") {
+    val wh = tmpDir("graft-late-wh")
+    val ckpt = tmpDir("graft-late-ckpt")
+    val reports = tmpDir("graft-late-reports")
+    val stage = tmpDir("graft-late-stage")
+    def ingest(): Unit = Pipeline.ingest(
+      spark.readStream.schema(Events.schema).parquet(stage), wh, ckpt)
+      .awaitTermination(120000)
+    val trigger = Instant.parse("2024-01-01T00:01:30Z") // reports minute 00:00
+    Events.generate(spark, 6000, 1704067200000L, intervalMs = 10)
+      .write.mode("append").parquet(stage)
+    ingest()
+    assert(Pipeline.minutelyReport(spark, wh, reports, trigger)
+      .contains(""""total_events": 6000"""))
+
+    // 600 late rows for the same minute arrive after its report was written
+    Events.generate(spark, 600, 1704067200000L, intervalMs = 100, seed = 99L)
+      .write.mode("append").parquet(stage)
+    ingest()
+    // the Scheduler never owes a completed interval again
+    assert(Scheduler.dueIntervals(Some(Instant.parse("2024-01-01T00:00:00Z")),
+      trigger, catchup = true).isEmpty)
+    // an explicit re-run replaces the report: one part file, new totals
+    val json = Pipeline.minutelyReport(spark, wh, reports, trigger)
+    assert(json.contains(""""total_events": 6600"""), json)
+    val dir = new java.io.File(s"$reports/2024-01-01_03-30")
+    assert(dir.list().count(_.startsWith("part-")) == 1, dir.list().mkString(","))
+    assert(sources.Warehouse.readReportJson(spark, dir.toString) == json)
+  }
 }

@@ -6,12 +6,13 @@ package graft
   * non-pushable join predicate). OperatorSpec asserts this for headline
   * plans; this sweep pins every one of the ~106 registered queries so a
   * new operator can't regress quietly. (Queries that materialize eagerly
-  * return LocalRelations — trivially clean — and the lazy ones only get
-  * PLANNED here, not executed.) */
+  * return LocalRelations — trivially clean — so the join/cartesian gate
+  * also plans their internal jobs from [[operators.InternalPlans]]; the
+  * lazy ones only get PLANNED here, not executed.) */
 class PlanHygieneSpec extends SparkSuite {
 
   test("no registered query plans a cartesian or nested-loop join") {
-    val offenders = SparkEntry.allDefs.flatMap { q =>
+    val offenders = (SparkEntry.allDefs ++ operators.InternalPlans.defs).flatMap { q =>
       val plan =
         try q.fn(spark, Sf).queryExecution.executedPlan.toString
         catch { case e: Throwable => s"PLANNING FAILED: ${e.getMessage}" }

@@ -173,4 +173,29 @@ class SchedulerSpec extends SparkSuite {
     assert(new java.io.File(landing).listFiles().map(_.getName).toSeq
       == Seq("2024-01-01_03-30.parquet"))
   }
+
+  test("Pipeline.minutelyReport and the Scheduler chain emit the same minute document") {
+    import com.fasterxml.jackson.databind.node.ObjectNode
+    val wh = tmpDir("graft-same-wh")
+    val reportsDir = tmpDir("graft-same-reports")
+    sources.Warehouse.writeEvents(
+      Events.generate(spark, 12000, 1704067200000L, intervalMs = 10), wh)
+    val iv = at("2024-01-01T00:01:00Z")
+    assert(runOnce(iv, minutelySteps(spark, wh, tmpDir("graft-same-landing"),
+      reportsDir, iv)).succeeded)
+    val viaScheduler = sources.Warehouse.readReportJson(spark, s"$reportsDir/2024-01-01_03-30")
+    val viaPipeline = Pipeline.minutelyReport(spark, wh, tmpDir("graft-same-pipe"), iv)
+    // process_time is wall time, and the KLL sketch is randomized: drop
+    // both values, keep every other key
+    def doc(json: String): ObjectNode = {
+      val r = new com.fasterxml.jackson.databind.ObjectMapper().readTree(json)
+        .get("report").asInstanceOf[ObjectNode]
+      assert(r.has("latency_ms"), json)
+      r.remove(java.util.List.of("process_time", "latency_ms"))
+      r
+    }
+    val (a, b) = (doc(viaPipeline), doc(viaScheduler))
+    assert(a.get("total_events").asLong == 6000, viaPipeline)
+    assert(a == b, s"pipeline: $viaPipeline\nscheduler: $viaScheduler")
+  }
 }

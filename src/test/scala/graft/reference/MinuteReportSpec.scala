@@ -56,10 +56,14 @@ class MinuteReportSpec extends SparkSuite {
   }
 
   test("report JSON envelope shape") {
-    val r = MinuteReport.analyze(goldenFixture, "f.parquet", processTime = 1.5)
+    val r = MinuteReport.analyze(goldenFixture, "f.parquet").copy(processTime = 1.5)
+    // every fixture row has latency 50 -> all three quantiles exactly 50
+    assert(r.latencyMs.contains((50.0, 50.0, 50.0)))
     val json = MinuteReport.toJson(r)
     assert(json.startsWith("""{"report": {"total_events": 100, "total_errors": 15,"""))
     assert(json.contains(""""CHECKOUT": {"SUCCESS": 17, "ERROR": 3}"""))
+    // reference keys keep their order around the additive latency block
+    assert(json.contains(""""latency_ms": {"p50": 50.0, "p90": 50.0, "p99": 50.0}, "process_time": 1.5, """))
     assert(json.contains(""""file_name": "f.parquet""""))
   }
 
@@ -72,32 +76,10 @@ class MinuteReportSpec extends SparkSuite {
     assert(wrap == "2024-07-01_00-14.parquet")
   }
 
-  test("minute filter prunes to exactly one minute") {
-    val df = Events.generate(spark, 12000, 1704067200000L, intervalMs = 10)
-    val m = java.sql.Timestamp.valueOf("2024-01-01 00:01:00")
-    val got = MinuteReport.forMinute(df, m)
-    assert(got.count() == 6000) // 10ms spacing -> 6000 events/minute
-  }
-
-  test("analyzeWithLatency: counts identical to analyze, quantiles exact on the constant-latency fixture") {
-    val base = MinuteReport.analyze(goldenFixture, "f.parquet")
-    val r = MinuteReport.analyzeWithLatency(goldenFixture, "f.parquet")
-    assert(r.totalEvents == base.totalEvents)
-    assert(r.totalErrors == base.totalErrors)
-    assert(r.byEventType == base.byEventType)
-    // every fixture row has latency 50 -> all three quantiles exactly 50
-    assert(r.latencyMs.contains((50.0, 50.0, 50.0)))
-    val json = MinuteReport.toJson(r)
-    assert(json.contains(""""latency_ms": {"p50": 50.0, "p90": 50.0, "p99": 50.0}"""))
-    // reference keys keep their order around the additive block
-    assert(json.startsWith("""{"report": {"total_events": 100, "total_errors": 15,"""))
-    assert(json.contains(""""file_name": "f.parquet""""))
-  }
-
   test("analyzeWithLatency: generated-minute quantiles stay within the tie-safe rank bound") {
     import org.apache.spark.sql.functions.col
     val ev = Events.generate(spark, 3000, 1704067200000L, intervalMs = 10)
-    val r = MinuteReport.analyzeWithLatency(ev, "g.parquet")
+    val r = MinuteReport.analyze(ev, "g.parquet")
     assert(r.totalEvents == 3000)
     val lats = ev.select(col("request_latency_ms").cast("double"))
       .collect().map(_.getDouble(0))
@@ -116,8 +98,8 @@ class MinuteReportSpec extends SparkSuite {
     val timeouts = ev.limit(300)
       .withColumn("status", lit("TIMEOUT"))
       .withColumn("request_latency_ms", lit(outlierMs))
-    val base = MinuteReport.analyzeWithLatency(ev, "g.parquet")
-    val r = MinuteReport.analyzeWithLatency(ev.unionByName(timeouts), "g.parquet")
+    val base = MinuteReport.analyze(ev, "g.parquet")
+    val r = MinuteReport.analyze(ev.unionByName(timeouts), "g.parquet")
     assert(base.totalEvents == 3000)
     assert(r.totalEvents == base.totalEvents)
     assert(r.totalErrors == base.totalErrors)
@@ -129,8 +111,11 @@ class MinuteReportSpec extends SparkSuite {
   test("analyzeWithLatency: empty input omits the latency block") {
     val empty = spark.createDataFrame(
       java.util.Collections.emptyList[Row](), Events.schema)
-    val r = MinuteReport.analyzeWithLatency(empty, "x.parquet")
+    val r = MinuteReport.analyze(empty, "x.parquet")
     assert(r.totalEvents == 0 && r.latencyMs.isEmpty)
     assert(!MinuteReport.toJson(r).contains("latency_ms"))
+    // the one assembly turns zero totals into the no-data sentinel
+    assert(MinuteReport.reportJson(empty, "x.parquet") ==
+      """{"report": "No data for x."}""")
   }
 }

@@ -43,6 +43,12 @@ class ReportPropertySpec extends SparkSuite {
       r.byEventType.values.foreach { case (s, e) => assert(s >= 0 && e >= 0) }
       // types absent from the input are absent from the report
       assert(r.byEventType.keySet == rows.map(_.getString(3)).toSet)
+      // the report's cells equal the registered query's pivot rows: the
+      // only two count paths over a minute agree
+      val pivot = MinuteReport.pivotCounts(df).collect().map { p =>
+        p.getString(0) -> ((p.getAs[Long]("SUCCESS"), p.getAs[Long]("ERROR")))
+      }.toMap
+      assert(r.byEventType == pivot)
     }
   }
 }

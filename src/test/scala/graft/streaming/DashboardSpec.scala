@@ -13,16 +13,16 @@ import graft.reference.Events
   * (airflow/tests/test_unit_report.py:33-139). */
 class DashboardSpec extends SparkSuite {
 
-  /** In-process dashboard API: records the last posted body, serves a
-    * configurable status. */
-  private def withServer(status: Int)(f: (String, AtomicReference[String], AtomicInteger) => Unit): Unit = {
+  /** In-process dashboard API: records the last posted body, serves the
+    * status `status(n)` for the n-th request (1-based). */
+  private def withServer(status: Int => Int)(f: (String, AtomicReference[String], AtomicInteger) => Unit): Unit = {
     val received = new AtomicReference[String]("")
     val hits = new AtomicInteger(0)
     val server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
     server.createContext("/dashboard", exchange => {
-      hits.incrementAndGet()
+      val n = hits.incrementAndGet()
       received.set(new String(exchange.getRequestBody.readAllBytes(), "UTF-8"))
-      exchange.sendResponseHeaders(status, -1)
+      exchange.sendResponseHeaders(status(n), -1)
       exchange.close()
     })
     server.start()
@@ -35,29 +35,68 @@ class DashboardSpec extends SparkSuite {
     assert(Dashboard.jsonPathFor("/x/2025-08-10_12-00") == "/x/2025-08-10_12-00.json")
   }
 
+  private def readReport(dir: String): String =
+    graft.sources.Warehouse.readReportJson(spark, dir)
+
+  private def report(json: String) =
+    new com.fasterxml.jackson.databind.ObjectMapper().readTree(json).get("report")
+
+  private def totalEvents(json: String): Long = report(json).get("total_events").asLong
+
+  /** Stage 2000 events as a file-source "topic" and return a streaming
+    * read of it. */
+  private def stagedEvents(prefix: String): org.apache.spark.sql.DataFrame = {
+    val stage = tmpDir(prefix)
+    Events.generate(spark, 2000, 1704067200000L, intervalMs = 10)
+      .write.mode("overwrite").parquet(stage)
+    spark.readStream.schema(Events.schema).parquet(stage)
+  }
+
   test("streaming leg posts each batch's minute report to the dashboard") {
-    withServer(200) { (url, received, hits) =>
-      val stage = tmpDir("dash-stage")
+    withServer(_ => 200) { (url, received, hits) =>
       val reports = tmpDir("dash-rep")
       val ckpt = tmpDir("dash-ckpt")
-      Events.generate(spark, 2000, 1704067200000L, intervalMs = 10)
-        .write.mode("overwrite").parquet(stage)
-      val src = spark.readStream.schema(Events.schema).parquet(stage)
-      Dashboard.startMinuteReportsToDashboard(src, reports, ckpt, url)
+      Dashboard.startMinuteReportsToDashboard(stagedEvents("dash-stage"), reports, ckpt, url)
         .awaitTermination(120000)
       assert(hits.get() >= 1, "dashboard never received a report")
       val body = received.get()
       assert(body.nonEmpty)
       // posted body is the report object the JSON sink persisted
-      val onDisk = graft.sources.Warehouse.readReportJson(
-        spark, s"$reports/batch-0.json")
-      assert(body == onDisk)
+      assert(body == readReport(s"$reports/batch-0.json"))
       assert(body.contains("\"file_name\""), s"unexpected report shape: $body")
+      assert(body.contains("\"latency_ms\""), s"no latency readout: $body")
+      // the batch reports together cover every staged event
+      val dirs = new java.io.File(reports).listFiles().filter(_.getName.startsWith("batch-"))
+      val total = dirs.map(d => totalEvents(readReport(d.toString))).sum
+      assert(total == 2000, s"reports cover $total of 2000 events")
+    }
+  }
+
+  test("a crash between the report write and the POST re-writes and re-posts on restart") {
+    // the first POST fails (HTTP 500), every later one succeeds
+    withServer(n => if (n == 1) 500 else 200) { (url, received, hits) =>
+      val events = stagedEvents("dash-crash-stage")
+      val reports = tmpDir("dash-crash-rep")
+      val ckpt = tmpDir("dash-crash-ckpt")
+      def run() = Dashboard.startMinuteReportsToDashboard(events, reports, ckpt, url)
+      val ex = intercept[org.apache.spark.sql.streaming.StreamingQueryException](
+        run().awaitTermination(120000))
+      val causes = Iterator.iterate[Throwable](ex)(_.getCause).takeWhile(_ != null)
+      assert(causes.exists(_.isInstanceOf[Dashboard.RequestFailed]), ex)
+      // the report was written before the POST failed
+      val written = readReport(s"$reports/batch-0.json")
+      assert(totalEvents(written) == 2000, written)
+      // restart on the same checkpoint: batch 0 was never committed, so it
+      // is replayed — report re-written and re-posted (at-least-once)
+      run().awaitTermination(120000)
+      assert(hits.get() == 2)
+      assert(report(received.get()).get("by_event_type") == report(written).get("by_event_type"))
+      assert(received.get() == readReport(s"$reports/batch-0.json"))
     }
   }
 
   test("missing report -> ReportNotFound (reference S3Error case)") {
-    withServer(200) { (url, _, hits) =>
+    withServer(_ => 200) { (url, _, hits) =>
       intercept[Dashboard.ReportNotFound](
         Dashboard.send(spark, tmpDir("dash-none") + "/nope.parquet", url))
       assert(hits.get() == 0, "must fail before any HTTP call")
@@ -65,7 +104,7 @@ class DashboardSpec extends SparkSuite {
   }
 
   test("unparseable report -> ReportMalformed (reference JSONDecodeError case)") {
-    withServer(200) { (url, _, hits) =>
+    withServer(_ => 200) { (url, _, hits) =>
       val dir = tmpDir("dash-bad")
       graft.sources.Warehouse.writeReportJson(spark, "not { json", s"$dir/r.json")
       intercept[Dashboard.ReportMalformed](Dashboard.send(spark, s"$dir/r.parquet", url))
@@ -74,7 +113,7 @@ class DashboardSpec extends SparkSuite {
   }
 
   test("non-2xx response -> RequestFailed (reference raise_for_status case)") {
-    withServer(500) { (url, _, _) =>
+    withServer(_ => 500) { (url, _, _) =>
       val dir = tmpDir("dash-500")
       graft.sources.Warehouse.writeReportJson(spark, """{"ok":1}""", s"$dir/r.json")
       val ex = intercept[Dashboard.RequestFailed](

@@ -65,23 +65,6 @@ class IngestStreamSpec extends SparkSuite {
     assert(all.select("event_id").distinct().count() == 5000)
   }
 
-  test("foreachBatch minute reports land as JSON per batch") {
-    val stage = tmpDir("graft-fb-stage")
-    val reports = tmpDir("graft-fb-reports")
-    val ckpt = tmpDir("graft-fb-ckpt")
-    Events.generate(spark, 2000, 1704067200000L).write.mode("overwrite").parquet(stage)
-    val src = spark.readStream.schema(Events.schema).parquet(stage)
-    Ingest.startMinuteReports(src, reports, ckpt).awaitTermination(120000)
-    val dirs = new java.io.File(reports).listFiles().filter(_.getName.startsWith("batch-"))
-    assert(dirs.nonEmpty)
-    val json = graft.sources.Warehouse.readReportJson(spark, dirs.head.toString)
-    assert(json.contains("\"total_events\": "))
-    val total = dirs.map(d =>
-      graft.sources.Warehouse.readReportJson(spark, d.toString))
-      .map(j => "\"total_events\": (\\d+)".r.findFirstMatchIn(j).get.group(1).toLong).sum
-    assert(total == 2000, s"reports cover $total of 2000 events")
-  }
-
   test("rate-source event stream produces valid events in real time") {
     val out = tmpDir("graft-rate-out")
     val ckpt = tmpDir("graft-rate-ckpt")
