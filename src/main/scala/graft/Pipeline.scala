@@ -18,7 +18,8 @@ import graft.streaming.Ingest
   *      the minute-partitioned warehouse, exactly-once.
   *   2. [[minutelyReport]] — Airflow-extract + Spark-job legs: pruned
   *      single-minute read, [[MinuteReport.reportJson]] to the report
-  *      sink, with the reference's no-data sentinel and Tehran naming.
+  *      sink (a driver-side commit, no Spark job), with the reference's
+  *      no-data sentinel and Tehran naming.
   *   3. Query surface — [[SparkEntry.queries]] for everything else.
   */
 object Pipeline {
@@ -37,7 +38,14 @@ object Pipeline {
     * (the reference's cron semantics, pipeline.py:130-131), write the JSON
     * report to `reportDir/<name>` (a re-run replaces it), and return the
     * JSON — the same document [[Scheduler.minutelySteps]] emits. Zero rows
-    * for the minute produce the `No data for {name}.` sentinel (P6). */
+    * for the minute produce the `No data for {name}.` sentinel (P6).
+    *
+    * The analysis runs to completion before the old report is touched:
+    * [[Warehouse.writeReportJson]] replaces `reportDir/<name>` only after
+    * the document exists, on the driver, with no Spark job. So a minute
+    * whose files cannot be read (say a truncated parquet part) makes a
+    * re-run throw and leaves the earlier report byte-identical. The two
+    * Spark jobs of a report are the analysis's. */
   def minutelyReport(
       spark: SparkSession,
       warehouseDir: String,

@@ -155,7 +155,9 @@ object Scheduler {
     *     path is read back and reported exactly as [[Pipeline.minutelyReport]]
     *     does; a bare name short-circuits to the `No data` sentinel
     *     report (pipeline.py:147-152). Returns JSON.
-    *  3. `report` — write the JSON to `reportDir` (the dashboard leg).
+    *  3. `report` — commit the JSON to `reportDir` (the dashboard leg)
+    *     with [[sources.Warehouse.writeReportJson]]: a driver-side write
+    *     through the Hadoop FileSystem API, so this step runs no Spark job.
     */
   def minutelySteps(
       spark: SparkSession,

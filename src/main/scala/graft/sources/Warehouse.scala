@@ -1,5 +1,9 @@
 package graft.sources
 
+import java.io.{BufferedReader, InputStreamReader}
+import java.nio.charset.StandardCharsets
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -16,8 +20,9 @@ import graft.reference.Events
   *    ORDER BY (event_minute, event_type) — gives parquet row-group min/max
   *    statistics the same skip power as the MergeTree primary index;
   *  - JSON report sink ≙ the reference's MinIO report object
-  *    (reference airflow/dags/spark.py:92-97); written through Spark so the
-  *    same code targets s3a:// at scale.
+  *    (reference airflow/dags/spark.py:92-97); committed on the driver
+  *    through the Hadoop FileSystem API, `_SUCCESS` last, so the same code
+  *    targets s3a:// and hdfs:// without running a Spark job.
   */
 object Warehouse {
 
@@ -70,7 +75,7 @@ object Warehouse {
                    schema: org.apache.spark.sql.types.StructType): DataFrame = {
     // existence probe through the Hadoop FileSystem API — a java.io.File
     // check would silently report s3a://, hdfs:// etc. warehouses as empty
-    val hPath = new org.apache.hadoop.fs.Path(path)
+    val hPath = new Path(path)
     val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(hPath) || fs.listStatus(hPath).isEmpty) {
       spark.createDataFrame(
@@ -154,15 +159,44 @@ object Warehouse {
       .parquet(path)
   }
 
-  /** Single-object JSON report sink (S4). Spark write → works unchanged
-    * against object stores; coalesce(1) mimics the reference's one report
-    * object per minute. */
+  /** Single-object JSON report sink (S4), committed on the driver: a
+    * one-line document needs no Spark job or commit protocol. Replaces
+    * `dir` (a re-run overwrites), writes `dir/part-00000.txt` holding
+    * `json` plus a newline, then creates `dir/_SUCCESS` last — Spark's own
+    * commit order, so a reader that checks the marker never sees a
+    * half-written part. The Hadoop FileSystem API resolves `dir`'s scheme,
+    * so s3a:// and hdfs:// work unchanged. No staging directory and rename:
+    * on S3A a directory rename copies in listing order, and `_SUCCESS`
+    * sorts before `part-`. The layout is the one `spark.read.text(dir)`
+    * reads. */
   def writeReportJson(spark: SparkSession, json: String, dir: String): Unit = {
-    import spark.implicits._
-    Seq(json).toDF("value").coalesce(1).write.mode("overwrite").text(dir)
+    val path = new Path(dir)
+    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.delete(path, true)
+    val out = fs.create(new Path(path, "part-00000.txt"), false)
+    try out.write((json + "\n").getBytes(StandardCharsets.UTF_8)) finally out.close()
+    fs.create(new Path(path, "_SUCCESS"), false).close()
   }
 
-  /** Read back a JSON report written by [[writeReportJson]]. */
-  def readReportJson(spark: SparkSession, dir: String): String =
-    spark.read.text(dir).collect().map(_.getString(0)).mkString("\n")
+  /** Read back a JSON report written by [[writeReportJson]], on the driver:
+    * a directory's visible files (no leading `_` or `.`) in name order, or
+    * a plain file itself, split into lines and joined with `\n` — the
+    * string `spark.read.text(dir)` collects to. A missing path throws
+    * `FileNotFoundException`. */
+  def readReportJson(spark: SparkSession, dir: String): String = {
+    val path = new Path(dir)
+    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val status = fs.getFileStatus(path)
+    val files =
+      if (!status.isDirectory) Seq(status.getPath)
+      else fs.listStatus(path).toSeq
+        .filter(f => f.isFile && !f.getPath.getName.startsWith("_") &&
+          !f.getPath.getName.startsWith("."))
+        .map(_.getPath).sortBy(_.getName)
+    files.flatMap { f =>
+      val in = new BufferedReader(new InputStreamReader(fs.open(f), StandardCharsets.UTF_8))
+      try Iterator.continually(in.readLine()).takeWhile(_ != null).toList
+      finally in.close()
+    }.mkString("\n")
+  }
 }

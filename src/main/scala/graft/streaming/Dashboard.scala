@@ -71,11 +71,13 @@ object Dashboard {
 
   /** The continuous report leg: foreachBatch assembles each micro-batch's
     * minute report ([[graft.reference.MinuteReport.reportJson]]), writes
-    * the JSON object (S4), then posts it (S7) — the in-engine twin of the
-    * reference's spark_analysis >> send_to_dashboard task chain. A failed
-    * POST fails the batch after the write, so a restart on the same
-    * checkpoint re-writes and re-sends it: at-least-once delivery to the
-    * dashboard, same as an Airflow task retry. */
+    * the JSON object (S4), reads it back and posts it (S7) — the write and
+    * the read are driver-side FileSystem calls, no Spark job. It is the
+    * in-engine twin of the reference's spark_analysis >> send_to_dashboard
+    * task chain. A failed POST fails the batch after the write, so a
+    * restart on the same checkpoint re-writes and re-sends it:
+    * at-least-once delivery to the dashboard, same as an Airflow task
+    * retry. */
   def startMinuteReportsToDashboard(
       events: DataFrame,
       reportDir: String,

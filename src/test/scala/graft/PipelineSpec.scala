@@ -1,6 +1,10 @@
 package graft
 
 import java.time.Instant
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.TestListenerBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
 import graft.reference.Events
 
@@ -68,5 +72,88 @@ class PipelineSpec extends SparkSuite {
     val dir = new java.io.File(s"$reports/2024-01-01_03-30")
     assert(dir.list().count(_.startsWith("part-")) == 1, dir.list().mkString(","))
     assert(sources.Warehouse.readReportJson(spark, dir.toString) == json)
+  }
+
+  /** One minute (00:00, 6000 events) ingested through the streaming sink
+    * into a fresh warehouse; returns the warehouse path. */
+  private def landMinute(prefix: String): String = {
+    val wh = tmpDir(s"$prefix-wh")
+    val stage = tmpDir(s"$prefix-stage")
+    Events.generate(spark, 6000, 1704067200000L, intervalMs = 10)
+      .write.mode("overwrite").parquet(stage)
+    Pipeline.ingest(spark.readStream.schema(Events.schema).parquet(stage),
+      wh, tmpDir(s"$prefix-ckpt")).awaitTermination(120000)
+    wh
+  }
+
+  /** `f`'s result and the number of Spark jobs it started. A fresh job
+    * group tags them, so a query running elsewhere in the JVM is not
+    * counted; the listener bus is drained before the count is read. */
+  private def withJobCount[A](f: => A): (A, Int) = {
+    val sc = spark.sparkContext
+    val group = s"job-count-${java.util.UUID.randomUUID()}"
+    val jobs = new AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "job-count gate")
+    val result =
+      try f
+      finally {
+        sc.clearJobGroup()
+        TestListenerBus.drain(sc)
+        sc.removeSparkListener(listener)
+      }
+    (result, jobs.get)
+  }
+
+  test("report path job count: at most 2 jobs per minute report, none for report I/O") {
+    val wh = landMinute("graft-jobs")
+    val reports = tmpDir("graft-jobs-reports")
+    val trigger = Instant.parse("2024-01-01T00:01:30Z") // reports minute 00:00
+    val (json, reportJobs) = withJobCount(Pipeline.minutelyReport(spark, wh, reports, trigger))
+    assert(json.contains(""""total_events": 6000"""), json)
+    // the analysis is counted (the gate sees jobs) and is all there is
+    assert(reportJobs >= 1 && reportJobs <= 2, s"minutelyReport ran $reportJobs jobs")
+
+    val dir = s"$reports/io-only"
+    val (back, ioJobs) = withJobCount {
+      sources.Warehouse.writeReportJson(spark, json, dir)
+      sources.Warehouse.readReportJson(spark, dir)
+    }
+    assert(back == json)
+    assert(ioJobs == 0, s"report write + read ran $ioJobs jobs")
+  }
+
+  test("a truncated parquet part fails the re-run and leaves the earlier report intact") {
+    val wh = landMinute("graft-trunc")
+    val reports = tmpDir("graft-trunc-reports")
+    val trigger = Instant.parse("2024-01-01T00:01:30Z") // reports minute 00:00
+    assert(Pipeline.minutelyReport(spark, wh, reports, trigger)
+      .contains(""""total_events": 6000"""))
+    val dir = new java.io.File(s"$reports/2024-01-01_03-30")
+    def snapshot(): Seq[(String, Seq[Byte])] =
+      Option(dir.listFiles()).toSeq.flatten.sortBy(_.getName)
+        .map(f => f.getName -> java.nio.file.Files.readAllBytes(f.toPath).toSeq)
+    val before = snapshot()
+
+    // cut one of the minute's committed part files in half, in place; its
+    // checksum file goes too, so the parquet reader (not the checksum
+    // layer) meets the damage
+    val minuteDir = new java.io.File(wh).listFiles()
+      .filter(_.getName.startsWith("event_minute=")).toSeq
+    assert(minuteDir.size == 1, minuteDir)
+    val part = minuteDir.head.listFiles().filter(_.getName.endsWith(".parquet"))
+      .minBy(_.getName)
+    val raf = new java.io.RandomAccessFile(part, "rw")
+    try raf.setLength(part.length / 2) finally raf.close()
+    new java.io.File(part.getParentFile, s".${part.getName}.crc").delete()
+
+    intercept[Exception](Pipeline.minutelyReport(spark, wh, reports, trigger))
+    // the analysis failed before the report was replaced
+    assert(snapshot() == before)
   }
 }

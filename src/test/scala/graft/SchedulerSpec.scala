@@ -198,4 +198,26 @@ class SchedulerSpec extends SparkSuite {
     assert(a.get("total_events").asLong == 6000, viaPipeline)
     assert(a == b, s"pipeline: $viaPipeline\nscheduler: $viaScheduler")
   }
+
+  test("a restarted scheduler with catchup=False reports only the latest owed interval") {
+    val wh = tmpDir("graft-restart-wh")
+    val landing = tmpDir("graft-restart-landing")
+    val reportsDir = tmpDir("graft-restart-reports")
+    // 5 minutes of events, 00:00 through 00:04
+    sources.Warehouse.writeEvents(
+      Events.generate(spark, 30000, 1704067200000L, intervalMs = 10), wh)
+    // the last completed interval started at 00:01; the scheduler comes
+    // back at 00:06:30, owing the intervals 00:02 through 00:05
+    val due = dueIntervals(Some(at("2024-01-01T00:01:00Z")), at("2024-01-01T00:06:30Z"),
+      catchup = false)
+    val runs = runDue(due, iv => minutelySteps(spark, wh, landing, reportsDir, iv))
+    assert(runs.map(_.interval) == Seq(at("2024-01-01T00:05:00Z")))
+    assert(runs.forall(_.succeeded), runs)
+    // one report, for the latest interval (minute 00:04, Tehran 03:34);
+    // nothing for the skipped minutes 00:01 through 00:03
+    assert(new java.io.File(reportsDir).list().toSeq == Seq("2024-01-01_03-34"))
+    assert(new java.io.File(landing).list().toSeq == Seq("2024-01-01_03-34.parquet"))
+    val json = sources.Warehouse.readReportJson(spark, s"$reportsDir/2024-01-01_03-34")
+    assert(json.contains(""""total_events": 6000"""), json)
+  }
 }

@@ -98,4 +98,37 @@ class WarehouseSpec extends SparkSuite {
     Warehouse.writeReportJson(spark, json, s"$dir/report")
     assert(Warehouse.readReportJson(spark, s"$dir/report") == json)
   }
+
+  test("JSON report commit: one part and _SUCCESS, Spark-readable, replaced in place") {
+    import java.nio.charset.StandardCharsets.UTF_8
+    val parent = tmpDir("graft-report-commit")
+    val dir = s"$parent/report"
+    // entries other than the local filesystem's hidden .crc checksums
+    def listing = new java.io.File(dir).list().filterNot(_.startsWith(".")).sorted.toSeq
+    val long = """{"report": {"total_events": 123456789, "file_name": "2024-01-01_03-29.parquet"}}"""
+    Warehouse.writeReportJson(spark, long, dir)
+    assert(listing == Seq("_SUCCESS", "part-00000.txt"))
+    // outside readers: Spark's own text source sees the same document
+    assert(spark.read.text(dir).collect().map(_.getString(0)).toSeq == Seq(long))
+
+    // a re-write of a shorter document replaces the first, no stale bytes
+    val short = """{"report": "No data for x."}"""
+    Warehouse.writeReportJson(spark, short, dir)
+    assert(listing == Seq("_SUCCESS", "part-00000.txt"))
+    val part = java.nio.file.Paths.get(dir, "part-00000.txt")
+    assert(new String(java.nio.file.Files.readAllBytes(part), UTF_8) == short + "\n")
+    assert(Warehouse.readReportJson(spark, dir) == short)
+    assert(Warehouse.readReportJson(spark, part.toString) == short)
+    // nothing staged beside the report
+    assert(new java.io.File(parent).list().toSeq == Seq("report"))
+
+    // the driver-side read joins lines exactly as spark.read.text does
+    val twoLines = "first line\nsecond line"
+    Warehouse.writeReportJson(spark, twoLines, dir)
+    spark.catalog.refreshByPath(dir)
+    assert(Warehouse.readReportJson(spark, dir) ==
+      spark.read.text(dir).collect().map(_.getString(0)).mkString("\n"))
+    assert(Warehouse.readReportJson(spark, dir) == twoLines)
+    intercept[java.io.FileNotFoundException](Warehouse.readReportJson(spark, s"$parent/missing"))
+  }
 }
