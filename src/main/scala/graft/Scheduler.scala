@@ -146,11 +146,16 @@ object Scheduler {
   /** The reference's three-task DAG over this library's legs
     * (pipeline.py:110-167), with its exact value-passing contract:
     *
-    *  1. `extract` — read the interval's minute from the warehouse and
-    *     land it as parquet under `landingDir` (the MinIO leg). Returns
-    *     the landed path, or — the reference's no-data signal — the bare
-    *     extension-less file name when the minute had no rows
-    *     (pipeline.py:131-140).
+    *  1. `extract` — land the interval's minute as parquet under
+    *     `landingDir` (the MinIO leg) by copying its committed files:
+    *     [[sources.Warehouse.minuteFiles]] names them from the warehouse's
+    *     exactly-once view and [[sources.Warehouse.landFiles]] copies the
+    *     bytes on the driver, `_SUCCESS` last. No row is decoded or
+    *     encoded and no Spark job runs; the landed files keep their part
+    *     names and, like any partition file, hold no `event_minute`
+    *     column. Returns the landed path, or — the reference's no-data
+    *     signal — the bare extension-less file name when the minute has no
+    *     files (pipeline.py:131-140).
     *  2. `analyze` — [[reference.MinuteReport.reportForPath]]: a parquet
     *     path is read back and reported exactly as [[Pipeline.minutelyReport]]
     *     does; a bare name short-circuits to the `No data` sentinel
@@ -175,11 +180,11 @@ object Scheduler {
         val minute = java.sql.Timestamp.from(
           intervalStart.truncatedTo(ChronoUnit.MINUTES)
             .minus(1, ChronoUnit.MINUTES))
-        val rows = sources.Warehouse.readMinute(spark, warehouseDir, minute)
-        if (rows.isEmpty) fileName.stripSuffix(".parquet")
+        val files = sources.Warehouse.minuteFiles(spark, warehouseDir, minute)
+        if (files.isEmpty) fileName.stripSuffix(".parquet")
         else {
           val path = s"$landingDir/$fileName"
-          rows.write.mode("overwrite").parquet(path)
+          sources.Warehouse.landFiles(spark, files, path)
           path
         }
       }),

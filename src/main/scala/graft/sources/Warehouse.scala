@@ -3,8 +3,10 @@ package graft.sources
 import java.io.{BufferedReader, InputStreamReader}
 import java.nio.charset.StandardCharsets
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, FileUtil, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.Filter
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
 
 import graft.reference.Events
@@ -22,7 +24,12 @@ import graft.reference.Events
   *  - JSON report sink ≙ the reference's MinIO report object
   *    (reference airflow/dags/spark.py:92-97); committed on the driver
   *    through the Hadoop FileSystem API, `_SUCCESS` last, so the same code
-  *    targets s3a:// and hdfs:// without running a Spark job.
+  *    targets s3a:// and hdfs:// without running a Spark job;
+  *  - minute landing ≙ the reference's extract to MinIO (reference
+  *    airflow/dags/pipeline.py:110-140): [[minuteFiles]] names a minute's
+  *    committed files from the same exactly-once view [[readMinute]]
+  *    reads, and [[landFiles]] copies those bytes as they are, on the
+  *    driver, with the report sink's commit order.
   */
 object Warehouse {
 
@@ -97,6 +104,60 @@ object Warehouse {
   def readMinute(spark: SparkSession, path: String, minute: java.sql.Timestamp): DataFrame =
     readEvents(spark, path).filter(col("event_minute") === lit(minute))
 
+  /** The committed files of one `event_minute` partition, from the same
+    * exactly-once view [[readMinute]] reads: the plan's file index is the
+    * sink's `_spark_metadata` log when the warehouse has one (so files of
+    * failed, uncommitted batches are never named) and the directory
+    * listing for a batch or compacted layout. [[readMinute]]'s own
+    * partition filter prunes the index, so the directory matches the way
+    * Spark's writer named it: the value parsed in the session time zone,
+    * with Spark's path escaping. Empty when the minute has no files or the
+    * warehouse does not exist yet.
+    *
+    * Runs no Spark job: the log is read and the partitions are pruned on
+    * the driver, as when [[readMinute]] is planned. (A batch layout with
+    * more than `spark.sql.sources.parallelPartitionDiscovery.threshold`
+    * minute directories is listed by a Spark job, for the read as well.) */
+  def minuteFiles(spark: SparkSession, path: String, minute: java.sql.Timestamp): Seq[Path] =
+    readMinute(spark, path, minute).queryExecution.analyzed.collectFirst {
+      case Filter(cond, l: LogicalRelation) if l.relation.isInstanceOf[HadoopFsRelation] =>
+        l.relation.asInstanceOf[HadoopFsRelation].location
+          .listFiles(Seq(cond), Nil).flatMap(_.files.map(_.getPath))
+    }.getOrElse(Nil)
+
+  /** Land `files` as the parquet directory `dir`, byte for byte: replace
+    * `dir`, copy each file into it under its own name, then create
+    * `dir/_SUCCESS` last — the commit order of [[writeReportJson]], so a
+    * reader that checks the marker never sees a partial landing. Runs on
+    * the driver through the Hadoop FileSystem API: no row is decoded or
+    * encoded and no Spark job runs.
+    *
+    * Bounded: each file streams through one fixed-size copy buffer, so
+    * driver memory stays constant and I/O is O(bytes landed) — for one
+    * warehouse minute about 0.4 MB at the reference's event rate. The
+    * reference's own extract also moves the minute through one process,
+    * its Airflow worker (pipeline.py:110-140). */
+  def landFiles(spark: SparkSession, files: Seq[Path], dir: String): Unit = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    commitDir(spark, dir) { (fs, to) =>
+      files.foreach { f =>
+        FileUtil.copy(f.getFileSystem(conf), f, fs, new Path(to, f.getName), false, conf)
+      }
+    }
+  }
+
+  /** Replace `dir`: delete it, run `write` against its FileSystem and
+    * path, then create `dir/_SUCCESS` last (Spark's own commit order). No
+    * staging directory and rename: on S3A a directory rename copies in
+    * listing order, and `_SUCCESS` sorts before `part-`. */
+  private def commitDir(spark: SparkSession, dir: String)(write: (FileSystem, Path) => Unit): Unit = {
+    val path = new Path(dir)
+    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.delete(path, true)
+    write(fs, path)
+    fs.create(new Path(path, "_SUCCESS"), false).close()
+  }
+
   /** Compact the warehouse's small files (a streaming sink appends one
     * file per minute per trigger — after a day of 1-minute triggers a hot
     * minute holds hundreds of tiny files): rewrite every partition with one
@@ -128,12 +189,16 @@ object Warehouse {
     *    the discovery scan and the anti-join — the big side never
     *    shuffles;
     *  - discovery reads only (user_id, event_minute) (column-pruned) and
-    *    the driver receives just the distinct touched minutes — bounded
-    *    by partitions touched, never by events;
-    *  - the rewrite is a dynamic-partition overwrite of exactly those
-    *    minutes (same mechanism as Ingest.upsertRollup), restoring the
-    *    clustering sort; untouched partitions' files are not opened, let
-    *    alone rewritten (DeleteSpec asserts via mtime).
+    *    the driver receives just the touched minutes, each flagged when
+    *    every one of its rows belongs to the users — bounded by
+    *    partitions touched, never by events;
+    *  - the rewrite is a dynamic-partition overwrite of the touched
+    *    minutes that keep rows (same mechanism as Ingest.upsertRollup),
+    *    restoring the clustering sort; untouched partitions' files are not
+    *    opened, let alone rewritten (DeleteSpec asserts via mtime);
+    *  - a dynamic overwrite replaces only the partitions its output
+    *    holds, so a minute emptied by the delete would keep every row:
+    *    its directory is removed instead, after the rewrite.
     *
     * The localCheckpoint materializes the touched slice before the write
     * because Spark (rightly) refuses a plan that overwrites a path it is
@@ -143,20 +208,30 @@ object Warehouse {
   def deleteUsers(spark: SparkSession, path: String, users: DataFrame): Unit = {
     val events = readEvents(spark, path)
     val ids = broadcast(users.select(col("user_id")).distinct())
-    val touched = events.join(ids, "user_id")
-      .select("event_minute").distinct().collect().map(_.get(0))
-    if (touched.isEmpty) return
-    val cols = events.columns.map(col)
-    events.filter(col("event_minute").isin(touched: _*))
-      .join(ids, Seq("user_id"), "left_anti")
-      .select(cols: _*)
-      .localCheckpoint()
-      .repartition(col("event_minute"))
-      .sortWithinPartitions(col("event_minute"), col("event_type"), col("event_timestamp"))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("event_minute")
-      .parquet(path)
+    val hit = col("hit").isNotNull
+    // one row per touched minute: (event_minute, emptied)
+    val touched = events.join(ids.withColumn("hit", lit(true)), Seq("user_id"), "left")
+      .groupBy("event_minute").agg(bool_or(hit).as("touched"), bool_and(hit).as("emptied"))
+      .filter(col("touched")).select("event_minute", "emptied").collect()
+    val (emptied, kept) = touched.partition(_.getBoolean(1))
+    if (kept.nonEmpty) {
+      val cols = events.columns.map(col)
+      events.filter(col("event_minute").isin(kept.map(_.get(0)).toIndexedSeq: _*))
+        .join(ids, Seq("user_id"), "left_anti")
+        .select(cols: _*)
+        .localCheckpoint()
+        .repartition(col("event_minute"))
+        .sortWithinPartitions(col("event_minute"), col("event_type"), col("event_timestamp"))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("event_minute")
+        .parquet(path)
+    }
+    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    emptied.foreach { r =>
+      minuteFiles(spark, path, r.getTimestamp(0)).map(_.getParent).distinct
+        .foreach(fs.delete(_, true))
+    }
   }
 
   /** Single-object JSON report sink (S4), committed on the driver: a
@@ -165,18 +240,13 @@ object Warehouse {
     * `json` plus a newline, then creates `dir/_SUCCESS` last — Spark's own
     * commit order, so a reader that checks the marker never sees a
     * half-written part. The Hadoop FileSystem API resolves `dir`'s scheme,
-    * so s3a:// and hdfs:// work unchanged. No staging directory and rename:
-    * on S3A a directory rename copies in listing order, and `_SUCCESS`
-    * sorts before `part-`. The layout is the one `spark.read.text(dir)`
-    * reads. */
-  def writeReportJson(spark: SparkSession, json: String, dir: String): Unit = {
-    val path = new Path(dir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(path, true)
-    val out = fs.create(new Path(path, "part-00000.txt"), false)
-    try out.write((json + "\n").getBytes(StandardCharsets.UTF_8)) finally out.close()
-    fs.create(new Path(path, "_SUCCESS"), false).close()
-  }
+    * so s3a:// and hdfs:// work unchanged. The layout is the one
+    * `spark.read.text(dir)` reads. */
+  def writeReportJson(spark: SparkSession, json: String, dir: String): Unit =
+    commitDir(spark, dir) { (fs, path) =>
+      val out = fs.create(new Path(path, "part-00000.txt"), false)
+      try out.write((json + "\n").getBytes(StandardCharsets.UTF_8)) finally out.close()
+    }
 
   /** Read back a JSON report written by [[writeReportJson]], on the driver:
     * a directory's visible files (no leading `_` or `.`) in name order, or

@@ -1,10 +1,6 @@
 package graft
 
 import java.time.Instant
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.TestListenerBus
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
 import graft.reference.Events
 
@@ -74,44 +70,8 @@ class PipelineSpec extends SparkSuite {
     assert(sources.Warehouse.readReportJson(spark, dir.toString) == json)
   }
 
-  /** One minute (00:00, 6000 events) ingested through the streaming sink
-    * into a fresh warehouse; returns the warehouse path. */
-  private def landMinute(prefix: String): String = {
-    val wh = tmpDir(s"$prefix-wh")
-    val stage = tmpDir(s"$prefix-stage")
-    Events.generate(spark, 6000, 1704067200000L, intervalMs = 10)
-      .write.mode("overwrite").parquet(stage)
-    Pipeline.ingest(spark.readStream.schema(Events.schema).parquet(stage),
-      wh, tmpDir(s"$prefix-ckpt")).awaitTermination(120000)
-    wh
-  }
-
-  /** `f`'s result and the number of Spark jobs it started. A fresh job
-    * group tags them, so a query running elsewhere in the JVM is not
-    * counted; the listener bus is drained before the count is read. */
-  private def withJobCount[A](f: => A): (A, Int) = {
-    val sc = spark.sparkContext
-    val group = s"job-count-${java.util.UUID.randomUUID()}"
-    val jobs = new AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "job-count gate")
-    val result =
-      try f
-      finally {
-        sc.clearJobGroup()
-        TestListenerBus.drain(sc)
-        sc.removeSparkListener(listener)
-      }
-    (result, jobs.get)
-  }
-
   test("report path job count: at most 2 jobs per minute report, none for report I/O") {
-    val wh = landMinute("graft-jobs")
+    val wh = ingestMinute("graft-jobs")
     val reports = tmpDir("graft-jobs-reports")
     val trigger = Instant.parse("2024-01-01T00:01:30Z") // reports minute 00:00
     val (json, reportJobs) = withJobCount(Pipeline.minutelyReport(spark, wh, reports, trigger))
@@ -129,7 +89,7 @@ class PipelineSpec extends SparkSuite {
   }
 
   test("a truncated parquet part fails the re-run and leaves the earlier report intact") {
-    val wh = landMinute("graft-trunc")
+    val wh = ingestMinute("graft-trunc")
     val reports = tmpDir("graft-trunc-reports")
     val trigger = Instant.parse("2024-01-01T00:01:30Z") // reports minute 00:00
     assert(Pipeline.minutelyReport(spark, wh, reports, trigger)

@@ -1,7 +1,11 @@
 package graft
 
+import java.io.File
+import java.nio.file.Files
 import java.time.Instant
 import java.util.concurrent.atomic.AtomicInteger
+
+import com.fasterxml.jackson.databind.node.ObjectNode
 
 import graft.reference.Events
 
@@ -14,6 +18,16 @@ class SchedulerSpec extends SparkSuite {
   import Scheduler._
 
   private def at(s: String): Instant = Instant.parse(s)
+
+  /** A minute document's `report` object without its two run-dependent
+    * values: `process_time` is wall time and the KLL sketch is randomized. */
+  private def doc(json: String): ObjectNode = {
+    val r = new com.fasterxml.jackson.databind.ObjectMapper().readTree(json)
+      .get("report").asInstanceOf[ObjectNode]
+    assert(r.has("latency_ms"), json)
+    r.remove(java.util.List.of("process_time", "latency_ms"))
+    r
+  }
 
   test("runOnce: a transient failure is retried once after retry_delay and succeeds") {
     val calls = new AtomicInteger(0)
@@ -175,7 +189,6 @@ class SchedulerSpec extends SparkSuite {
   }
 
   test("Pipeline.minutelyReport and the Scheduler chain emit the same minute document") {
-    import com.fasterxml.jackson.databind.node.ObjectNode
     val wh = tmpDir("graft-same-wh")
     val reportsDir = tmpDir("graft-same-reports")
     sources.Warehouse.writeEvents(
@@ -185,15 +198,6 @@ class SchedulerSpec extends SparkSuite {
       reportsDir, iv)).succeeded)
     val viaScheduler = sources.Warehouse.readReportJson(spark, s"$reportsDir/2024-01-01_03-30")
     val viaPipeline = Pipeline.minutelyReport(spark, wh, tmpDir("graft-same-pipe"), iv)
-    // process_time is wall time, and the KLL sketch is randomized: drop
-    // both values, keep every other key
-    def doc(json: String): ObjectNode = {
-      val r = new com.fasterxml.jackson.databind.ObjectMapper().readTree(json)
-        .get("report").asInstanceOf[ObjectNode]
-      assert(r.has("latency_ms"), json)
-      r.remove(java.util.List.of("process_time", "latency_ms"))
-      r
-    }
     val (a, b) = (doc(viaPipeline), doc(viaScheduler))
     assert(a.get("total_events").asLong == 6000, viaPipeline)
     assert(a == b, s"pipeline: $viaPipeline\nscheduler: $viaScheduler")
@@ -219,5 +223,68 @@ class SchedulerSpec extends SparkSuite {
     assert(new java.io.File(landing).list().toSeq == Seq("2024-01-01_03-34.parquet"))
     val json = sources.Warehouse.readReportJson(spark, s"$reportsDir/2024-01-01_03-34")
     assert(json.contains(""""total_events": 6000"""), json)
+  }
+
+  /** The parquet part files of a directory, name → bytes. */
+  private def parts(dir: File): Map[String, Seq[Byte]] =
+    dir.listFiles().filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
+      .map(f => f.getName -> Files.readAllBytes(f.toPath).toSeq).toMap
+
+  test("extract lands the minute's committed files byte for byte, never an uncommitted one") {
+    val wh = ingestMinute("graft-land")
+    val minuteDir = new File(wh).listFiles().filter(_.getName.startsWith("event_minute=")).head
+    val committed = parts(minuteDir)
+    assert(committed.nonEmpty)
+    // a failed batch's leftover: a readable part file the sink's
+    // _spark_metadata log never committed
+    val planted = "part-99999-00000000-0000-0000-0000-000000000000.c000.snappy.parquet"
+    Files.copy(new File(minuteDir, committed.keys.min).toPath, new File(minuteDir, planted).toPath)
+
+    val landing = tmpDir("graft-land-landing")
+    val reportsDir = tmpDir("graft-land-reports")
+    val iv = at("2024-01-01T00:01:00Z")
+    val run = runOnce(iv, minutelySteps(spark, wh, landing, reportsDir, iv))
+    assert(run.succeeded, run)
+    val landedDir = new File(landing, "2024-01-01_03-30.parquet")
+    val landed = parts(landedDir)
+    // exactly the committed files: the planted one is not among them
+    assert(landed.keySet == committed.keySet, s"landed ${landed.keySet}")
+    assert(committed.forall { case (name, bytes) => landed(name) == bytes },
+      "a landed file differs from its committed bytes")
+    assert(new File(landedDir, "_SUCCESS").isFile)
+
+    val viaScheduler = sources.Warehouse.readReportJson(spark, s"$reportsDir/2024-01-01_03-30")
+    val viaPipeline = Pipeline.minutelyReport(spark, wh, tmpDir("graft-land-pipe"), iv)
+    assert(doc(viaScheduler).get("total_events").asLong == 6000, viaScheduler)
+    assert(doc(viaScheduler) == doc(viaPipeline),
+      s"pipeline: $viaPipeline\nscheduler: $viaScheduler")
+  }
+
+  test("job count: extract and report run no Spark job, the whole chain at most 2") {
+    val wh = ingestMinute("graft-sched-jobs")
+    val landing = tmpDir("graft-sched-jobs-landing")
+    val reportsDir = tmpDir("graft-sched-jobs-reports")
+    /** Spark jobs per step of one chain run. */
+    def stepJobs(iv: Instant): Map[String, Int] = {
+      val counts = scala.collection.mutable.Map.empty[String, Int]
+      val steps = minutelySteps(spark, wh, landing, reportsDir, iv).map { st =>
+        st.copy(body = up => {
+          val (out, n) = withJobCount(st.body(up))
+          counts(st.name) = n
+          out
+        })
+      }
+      val run = runOnce(iv, steps)
+      assert(run.succeeded, run)
+      counts.toMap
+    }
+    // a landed minute (00:00): the analysis's jobs are all there are
+    val landed = stepJobs(at("2024-01-01T00:01:00Z"))
+    assert(landed("extract") == 0, landed)
+    assert(landed("report") == 0, landed)
+    assert(landed("analyze") >= 1 && landed.values.sum <= 2, landed)
+    // an empty minute: the no-data signal costs no job anywhere
+    val empty = stepJobs(at("2024-01-01T09:00:00Z"))
+    assert(empty == Map("extract" -> 0, "analyze" -> 0, "report" -> 0), empty)
   }
 }

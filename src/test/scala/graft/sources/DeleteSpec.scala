@@ -77,4 +77,30 @@ class DeleteSpec extends SparkSuite {
     assert(same == mtime)
     assert(Warehouse.readEvents(spark, wh).count() == 6000)
   }
+
+  test("deleteUsers removes a minute whose rows all belong to the deleted users") {
+    val wh = tmpDir("graft-delete-emptied")
+    Warehouse.writeEvents(Events.generate(spark, 18000, 1704067200000L, intervalMs = 10), wh)
+    val before = Warehouse.readEvents(spark, wh)
+    // every user of minute 0, so all its rows go, plus users of minute 1's
+    // first ten seconds, so minute 1 is touched but keeps its other rows
+    val victims = before
+      .filter(col("event_timestamp") < "2024-01-01 00:01:10")
+      .select(col("user_id")).distinct().localCheckpoint()
+    val victimIds = victims.collect().map(_.getString(0)).toSeq
+    val doomed = before.filter(col("user_id").isin(victimIds: _*)).count()
+    assert(doomed > 6000)
+    val totalBefore = before.count()
+
+    Warehouse.deleteUsers(spark, wh, victims)
+
+    val after = Warehouse.readEvents(spark, wh)
+    assert(after.filter(col("user_id").isin(victimIds: _*)).count() == 0,
+      "victim rows survived")
+    assert(after.count() == totalBefore - doomed)
+    val partDirs = new java.io.File(wh).listFiles()
+      .filter(_.getName.startsWith("event_minute=")).map(_.getName).sorted.toSeq
+    assert(partDirs == Seq("event_minute=2024-01-01 00%3A01%3A00",
+      "event_minute=2024-01-01 00%3A02%3A00"), partDirs)
+  }
 }

@@ -131,4 +131,23 @@ class WarehouseSpec extends SparkSuite {
     assert(Warehouse.readReportJson(spark, dir) == twoLines)
     intercept[java.io.FileNotFoundException](Warehouse.readReportJson(spark, s"$parent/missing"))
   }
+
+  test("minuteFiles finds a minute partition written under a non-UTC session time zone") {
+    val tzKey = "spark.sql.session.timeZone"
+    val tz = spark.conf.get(tzKey)
+    spark.conf.set(tzKey, "Asia/Tehran")
+    try {
+      val wh = tmpDir("graft-warehouse-tz")
+      Warehouse.writeEvents(Events.generate(spark, 12000, 1704067200000L, intervalMs = 10), wh)
+      // minute 00:01Z: the writer names it in Tehran time (+03:30), with
+      // ':' escaped as Spark escapes partition values
+      val dir = new java.io.File(wh, "event_minute=2024-01-01 03%3A31%3A00")
+      val expected = dir.listFiles().filter(_.getName.endsWith(".parquet")).map(_.getName).toSet
+      assert(expected.nonEmpty)
+      val files = Warehouse.minuteFiles(spark, wh,
+        java.sql.Timestamp.from(java.time.Instant.parse("2024-01-01T00:01:00Z")))
+      assert(files.map(_.getParent.getName).distinct == Seq(dir.getName), files)
+      assert(files.map(_.getName).toSet == expected, files)
+    } finally spark.conf.set(tzKey, tz)
+  }
 }
