@@ -117,7 +117,7 @@ object Manifest {
         if (added.isEmpty) kept
         else kept.unionByName(fileStats(s, added, cols))
       // localCheckpoint: materialize before overwriting the dir the plan
-      // reads (same self-overwrite rule as Warehouse.deleteUsers)
+      // reads (Spark refuses a plan that overwrites a path it reads)
       next.localCheckpoint().coalesce(1)
         .write.mode("overwrite").parquet(mDir)
       // the overwrite wiped the dir; restore the durable completion

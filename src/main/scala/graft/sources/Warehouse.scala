@@ -2,12 +2,14 @@ package graft.sources
 
 import java.io.{BufferedReader, InputStreamReader}
 import java.nio.charset.StandardCharsets
+import java.time.ZoneId
+import java.time.format.DateTimeFormatter
 
 import org.apache.hadoop.fs.{FileSystem, FileUtil, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.plans.logical.Filter
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StructType, TimestampType}
 
 import graft.reference.Events
 
@@ -27,15 +29,30 @@ import graft.reference.Events
   *    targets s3a:// and hdfs:// without running a Spark job;
   *  - minute landing ≙ the reference's extract to MinIO (reference
   *    airflow/dags/pipeline.py:110-140): [[minuteFiles]] names a minute's
-  *    committed files from the same exactly-once view [[readMinute]]
-  *    reads, and [[landFiles]] copies those bytes as they are, on the
-  *    driver, with the report sink's commit order.
+  *    files, the same ones [[readMinute]] reads, and [[landFiles]] copies
+  *    those bytes as they are, on the driver, with the report sink's
+  *    commit order.
+  *
+  * One commit, one visibility rule (≙ MergeTree's immutable parts): every
+  * writer lays its rows out with [[writeSorted]], so each minute holds
+  * files sorted by (event_type, event_timestamp). The streaming ingest
+  * and [[deleteUsers]] commit through [[publish]]: it stages that layout
+  * under the hidden `_staging/`, then moves each minute's files into
+  * `event_minute=M/` under names fixed by the writer's tag, one rename
+  * per file; [[compact]] writes a new warehouse whole. A minute's visible
+  * set is the files of its directory whose names do not start with `_`
+  * or `.`: no commit log is read, and a minute read lists that one
+  * directory.
   */
 object Warehouse {
 
-  /** Write events into the minute-partitioned warehouse. One shuffle on the
-    * partition key (repartition before partitionBy keeps it to one file per
-    * minute instead of files × tasks — at 100 TB adjust the explicit count
+  /** Write events into the minute-partitioned warehouse: [[byMinute]],
+    * then [[writeSorted]] — one file per minute. */
+  def writeEvents(events: DataFrame, path: String, mode: String = "overwrite"): Unit =
+    writeSorted(byMinute(events), path, mode)
+
+  /** `events` with their minute, hashed on it: one shuffle, so each minute
+    * lands in exactly one task (at 100 TB adjust the explicit count
     * upward for multiple writers per hot minute).
     *
     * The count is EXPLICIT (the session's configured shuffle parallelism,
@@ -44,27 +61,26 @@ object Warehouse {
     * participates in AQE partition coalescing, which merged the 10M-event
     * scale leg's write into ~8 tasks that each opened ~200 minute
     * directories sequentially — writer parallelism, not data size, bounds
-    * this write. Hashing on the minute still lands each minute in exactly
-    * one task, so the one-file-per-minute layout is unchanged. */
-  def writeEvents(events: DataFrame, path: String, mode: String = "overwrite"): Unit =
+    * this write. */
+  private[graft] def byMinute(events: DataFrame): DataFrame =
     Events.withEventMinute(events)
-      .repartition(events.sparkSession.sessionState.conf.numShufflePartitions,
-        col("event_minute"))
-      // The sort must LEAD with the partition column: the dynamic-partition
-      // writer requires ordering by partition columns and would otherwise
-      // insert its own (non-stable) sort on event_minute, destroying the
-      // secondary (event_type, event_timestamp) clustering.
-      .sortWithinPartitions(col("event_minute"), col("event_type"), col("event_timestamp"))
+      .repartition(events.sparkSession.sessionState.conf.numShufflePartitions, col("event_minute"))
+
+  /** The warehouse layout of `events` as its tasks hold them: each task
+    * writes one file per minute it holds, rows sorted by (event_type,
+    * event_timestamp). The sort must LEAD with the partition column: the
+    * dynamic-partition writer requires ordering by partition columns and
+    * would otherwise insert its own (non-stable) sort on event_minute,
+    * destroying the secondary (event_type, event_timestamp) clustering. */
+  private def writeSorted(events: DataFrame, path: String, mode: String = "overwrite"): Unit =
+    events.sortWithinPartitions(col("event_minute"), col("event_type"), col("event_timestamp"))
       .write.mode(mode).partitionBy("event_minute").parquet(path)
 
   /** Schema of the warehouse layout (event columns + partition key). */
-  val warehouseSchema: org.apache.spark.sql.types.StructType =
-    Events.schema.add("event_minute", org.apache.spark.sql.types.TimestampType)
+  val warehouseSchema: StructType = Events.schema.add("event_minute", TimestampType)
 
-  /** Read the warehouse with an exactly-once view and a tolerant empty
-    * case. A missing or not-yet-written warehouse is "no data", not an
-    * error — the minutely report's sentinel path depends on this
-    * (reference P6). */
+  /** Read every published file of the warehouse. A missing or
+    * not-yet-written warehouse is "no data", not an error ([[readDir]]). */
   def readEvents(spark: SparkSession, path: String): DataFrame =
     readEventsAs(spark, path, warehouseSchema)
 
@@ -78,52 +94,87 @@ object Warehouse {
     * contract, old files either conform (missing ⇒ null) or fail loudly.
     * WarehouseEvolutionSpec pins null-fill, pruning across eras, and the
     * dropped-column direction (old extra columns are simply not read). */
-  def readEventsAs(spark: SparkSession, path: String,
-                   schema: org.apache.spark.sql.types.StructType): DataFrame = {
-    // existence probe through the Hadoop FileSystem API — a java.io.File
-    // check would silently report s3a://, hdfs:// etc. warehouses as empty
-    val hPath = new Path(path)
-    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(hPath) || fs.listStatus(hPath).isEmpty) {
-      spark.createDataFrame(
-        java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema)
-    } else {
-      // Refresh first: a batch read after a streaming sink appended to the
-      // same path in this session can otherwise serve a stale listing from
-      // the shared FileStatusCache (no TTL by default). Reading the ROOT
-      // (not a partition glob) keeps the read going through the sink's
-      // _spark_metadata commit log, so files from failed, uncommitted
-      // batches are never visible — the exactly-once view.
-      spark.catalog.refreshByPath(path)
-      spark.read.schema(schema).parquet(path)
+  def readEventsAs(spark: SparkSession, path: String, schema: StructType): DataFrame =
+    readDir(spark, new Path(path), path, schema)
+
+  /** One minute's rows: reads the one directory [[minuteDir]] names, with
+    * `event_minute` parsed from its name, so no other minute is listed. */
+  def readMinute(spark: SparkSession, path: String, minute: java.sql.Timestamp): DataFrame =
+    readDir(spark, minuteDir(spark, path, minute), path, warehouseSchema)
+      .filter(col("event_minute") === lit(minute))
+
+  /** `dir` (the warehouse at `path` or one of its minute directories) read
+    * with `schema`. A missing or empty `dir` is "no data", not an error —
+    * the minutely report's sentinel path depends on this (reference P6).
+    * The existence probe goes through the Hadoop FileSystem API: a
+    * java.io.File check would report s3a://, hdfs:// etc. warehouses as
+    * empty. */
+  private def readDir(spark: SparkSession, dir: Path, path: String, schema: StructType): DataFrame = {
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(dir) || fs.listStatus(dir).isEmpty)
+      spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
+    else {
+      // a cached plan over this directory would otherwise keep its old
+      // file listing after a publish
+      spark.catalog.refreshByPath(dir.toString)
+      spark.read.schema(schema).option("basePath", path).parquet(dir.toString)
     }
   }
 
-  /** Minute-pruned read: the filter binds to the partition column, so the
-    * scan touches exactly one partition directory. */
-  def readMinute(spark: SparkSession, path: String, minute: java.sql.Timestamp): DataFrame =
-    readEvents(spark, path).filter(col("event_minute") === lit(minute))
+  /** The directory of `minute` under the warehouse at `path`, named as
+    * Spark's writer names it: the value formatted in the session time
+    * zone, with Spark's partition-path escaping. */
+  private def minuteDir(spark: SparkSession, path: String, minute: java.sql.Timestamp): Path =
+    new Path(path, ExternalCatalogUtils.getPartitionPathString("event_minute",
+      DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm:ss")
+        .withZone(ZoneId.of(spark.sessionState.conf.sessionLocalTimeZone)).format(minute.toInstant)))
 
-  /** The committed files of one `event_minute` partition, from the same
-    * exactly-once view [[readMinute]] reads: the plan's file index is the
-    * sink's `_spark_metadata` log when the warehouse has one (so files of
-    * failed, uncommitted batches are never named) and the directory
-    * listing for a batch or compacted layout. [[readMinute]]'s own
-    * partition filter prunes the index, so the directory matches the way
-    * Spark's writer named it: the value parsed in the session time zone,
-    * with Spark's path escaping. Empty when the minute has no files or the
-    * warehouse does not exist yet.
+  /** The visible files of `dir` in name order: no leading `_` or `.`;
+    * empty when `dir` does not exist. */
+  private def visibleFiles(fs: FileSystem, dir: Path): Seq[Path] =
+    if (!fs.exists(dir)) Nil
+    else fs.listStatus(dir).toSeq
+      .filter(f => f.isFile && !f.getPath.getName.startsWith("_") && !f.getPath.getName.startsWith("."))
+      .map(_.getPath).sortBy(_.getName)
+
+  /** The files of one minute, the same ones [[readMinute]] reads: the
+    * visible files of its directory. Empty when the minute has no files or
+    * the warehouse does not exist yet. Runs no Spark job. */
+  def minuteFiles(spark: SparkSession, path: String, minute: java.sql.Timestamp): Seq[Path] = {
+    val dir = minuteDir(spark, path, minute)
+    visibleFiles(dir.getFileSystem(spark.sparkContext.hadoopConfiguration), dir)
+  }
+
+  /** The warehouse commit: lay `rows` out with [[writeSorted]] under the
+    * hidden `<path>/_staging/<tag>`, then move each staged minute's files
+    * into that minute's directory as `part-<tag>-<i>.parquet`, replacing
+    * the files of the same tag there, so publishing one tag twice leaves
+    * one copy. Each minute in `replaced` first loses its whole directory,
+    * so one that stages no rows ends without files. The staging directory
+    * is deleted last.
     *
-    * Runs no Spark job: the log is read and the partitions are pruned on
-    * the driver, as when [[readMinute]] is planned. (A batch layout with
-    * more than `spark.sql.sources.parallelPartitionDiscovery.threshold`
-    * minute directories is listed by a Spark job, for the read as well.) */
-  def minuteFiles(spark: SparkSession, path: String, minute: java.sql.Timestamp): Seq[Path] =
-    readMinute(spark, path, minute).queryExecution.analyzed.collectFirst {
-      case Filter(cond, l: LogicalRelation) if l.relation.isInstanceOf[HadoopFsRelation] =>
-        l.relation.asInstanceOf[HadoopFsRelation].location
-          .listFiles(Seq(cond), Nil).flatMap(_.files.map(_.getPath))
-    }.getOrElse(Nil)
+    * The moves run on the driver, one rename per file: a reader of a
+    * minute sees all of a tag's rows for it or none. Between a replaced
+    * minute's delete and its rename the minute reads as empty, as under
+    * Spark's dynamic partition overwrite. */
+  private[graft] def publish(rows: DataFrame, path: String, tag: String,
+      replaced: Seq[java.sql.Timestamp] = Nil): Unit = {
+    val spark = rows.sparkSession
+    val stage = new Path(path, s"_staging/$tag")
+    writeSorted(rows, stage.toString)
+    val fs = stage.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    replaced.foreach(m => fs.delete(minuteDir(spark, path, m), true))
+    fs.listStatus(stage).filter(_.isDirectory).foreach { m =>
+      val dir = new Path(path, m.getPath.getName)
+      visibleFiles(fs, dir).filter(_.getName.startsWith(s"part-$tag-")).foreach(fs.delete(_, false))
+      fs.mkdirs(dir)
+      visibleFiles(fs, m.getPath).zipWithIndex.foreach { case (f, i) =>
+        val to = new Path(dir, s"part-$tag-$i.parquet")
+        if (!fs.rename(f, to)) throw new java.io.IOException(s"could not publish $f as $to")
+      }
+    }
+    fs.delete(stage, true)
+  }
 
   /** Land `files` as the parquet directory `dir`, byte for byte: replace
     * `dir`, copy each file into it under its own name, then create
@@ -158,80 +209,48 @@ object Warehouse {
     fs.create(new Path(path, "_SUCCESS"), false).close()
   }
 
-  /** Compact the warehouse's small files (a streaming sink appends one
-    * file per minute per trigger — after a day of 1-minute triggers a hot
-    * minute holds hundreds of tiny files): rewrite every partition with one
-    * shuffle on the partition key, restoring the clustering sort.
-    *
-    * The compacted copy is a BATCH layout with no `_spark_metadata` log, so
-    * readers list the filesystem directly. Two invariants when adopting it:
-    * (1) never resume the old checkpointed streaming query into the swapped
-    * directory — the sink would recreate `_spark_metadata` holding only
-    * post-swap batches and the commit-log-honoring readers would drop the
-    * compacted history; point the resumed query (fresh checkpoint) at the
-    * compacted dir or a new one. (2) the same rule applies to any batch
-    * append into a directory that already has a sink metadata log. */
+  /** Compact the warehouse's small files (the streaming ingest publishes
+    * files per minute per micro-batch — after a day of 1-minute triggers
+    * a hot minute holds hundreds of tiny files): [[writeEvents]]
+    * lays every minute out again at `outPath`, one file per minute,
+    * restoring the clustering sort. The copy is a warehouse like any
+    * other, so an ingest may resume into it under a fresh checkpoint. */
   def compact(spark: SparkSession, path: String, outPath: String): Unit =
-    readEvents(spark, path)
-      .repartition(col("event_minute"))
-      .sortWithinPartitions(col("event_minute"), col("event_type"), col("event_timestamp"))
-      .write.mode("overwrite").partitionBy("event_minute").parquet(outPath)
+    writeEvents(readEvents(spark, path), outPath)
 
   /** Targeted delete (the right-to-be-forgotten path every event
     * warehouse eventually needs): remove every event of the given users,
-    * rewriting ONLY the minute-partitions that contain them. Plain
-    * parquet has no row-level delete, so the unit of rewrite is the
-    * partition — the design job is keeping the rewrite set small and the
-    * discovery pass cheap:
+    * rewriting ONLY the minutes that contain them. Plain parquet has no
+    * row-level delete, so the unit of rewrite is the minute — the design
+    * job is keeping the rewrite set small and the discovery pass cheap:
     *
     *  - the user set arrives as a DataFrame (at scale it is a table of
     *    erasure requests, not a literal list) and is broadcast into both
     *    the discovery scan and the anti-join — the big side never
     *    shuffles;
     *  - discovery reads only (user_id, event_minute) (column-pruned) and
-    *    the driver receives just the touched minutes, each flagged when
-    *    every one of its rows belongs to the users — bounded by
+    *    the driver receives just the touched minutes — bounded by
     *    partitions touched, never by events;
-    *  - the rewrite is a dynamic-partition overwrite of the touched
-    *    minutes that keep rows (same mechanism as Ingest.upsertRollup),
-    *    restoring the clustering sort; untouched partitions' files are not
-    *    opened, let alone rewritten (DeleteSpec asserts via mtime);
-    *  - a dynamic overwrite replaces only the partitions its output
-    *    holds, so a minute emptied by the delete would keep every row:
-    *    its directory is removed instead, after the rewrite.
+    *  - the surviving rows of the touched minutes are staged one file per
+    *    minute ([[byMinute]]) and published as those minutes'
+    *    replacements; a minute left with no rows publishes nothing and so
+    *    loses its files. Untouched minutes' files are not opened, let
+    *    alone rewritten (DeleteSpec asserts via mtime).
     *
-    * The localCheckpoint materializes the touched slice before the write
-    * because Spark (rightly) refuses a plan that overwrites a path it is
-    * still reading. The slice is O(touched partitions), the honest floor
-    * for a format without delete vectors; a table format with row-level
-    * deletes shrinks the rewrite, not the discovery shape. */
+    * The staged write finishes before any warehouse file moves, so the
+    * plan never overwrites a path it is still reading. The rewrite is
+    * O(touched partitions), the honest floor for a format without delete
+    * vectors; a table format with row-level deletes shrinks the rewrite,
+    * not the discovery shape. */
   def deleteUsers(spark: SparkSession, path: String, users: DataFrame): Unit = {
     val events = readEvents(spark, path)
     val ids = broadcast(users.select(col("user_id")).distinct())
-    val hit = col("hit").isNotNull
-    // one row per touched minute: (event_minute, emptied)
-    val touched = events.join(ids.withColumn("hit", lit(true)), Seq("user_id"), "left")
-      .groupBy("event_minute").agg(bool_or(hit).as("touched"), bool_and(hit).as("emptied"))
-      .filter(col("touched")).select("event_minute", "emptied").collect()
-    val (emptied, kept) = touched.partition(_.getBoolean(1))
-    if (kept.nonEmpty) {
-      val cols = events.columns.map(col)
-      events.filter(col("event_minute").isin(kept.map(_.get(0)).toIndexedSeq: _*))
-        .join(ids, Seq("user_id"), "left_anti")
-        .select(cols: _*)
-        .localCheckpoint()
-        .repartition(col("event_minute"))
-        .sortWithinPartitions(col("event_minute"), col("event_type"), col("event_timestamp"))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("event_minute")
-        .parquet(path)
-    }
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    emptied.foreach { r =>
-      minuteFiles(spark, path, r.getTimestamp(0)).map(_.getParent).distinct
-        .foreach(fs.delete(_, true))
-    }
+    val touched = events.join(ids, Seq("user_id"), "left_semi")
+      .select("event_minute").distinct().collect().map(_.getTimestamp(0)).toSeq
+    if (touched.nonEmpty)
+      publish(byMinute(events.filter(col("event_minute").isin(touched: _*))
+        .join(ids, Seq("user_id"), "left_anti").select(events.columns.map(col): _*)),
+        path, java.util.UUID.randomUUID().toString, replaced = touched)
   }
 
   /** Single-object JSON report sink (S4), committed on the driver: a
@@ -257,12 +276,7 @@ object Warehouse {
     val path = new Path(dir)
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val status = fs.getFileStatus(path)
-    val files =
-      if (!status.isDirectory) Seq(status.getPath)
-      else fs.listStatus(path).toSeq
-        .filter(f => f.isFile && !f.getPath.getName.startsWith("_") &&
-          !f.getPath.getName.startsWith("."))
-        .map(_.getPath).sortBy(_.getName)
+    val files = if (status.isDirectory) visibleFiles(fs, path) else Seq(status.getPath)
     files.flatMap { f =>
       val in = new BufferedReader(new InputStreamReader(fs.open(f), StandardCharsets.UTF_8))
       try Iterator.continually(in.readLine()).takeWhile(_ != null).toList

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.reference.Events
+import graft.sources.Warehouse
 
 /** Structured Streaming rebuild of the reference's ingest leg
   * (producer → Kafka → Kafka Connect → ClickHouse, SURVEY.md §2.9/§3.3):
@@ -17,22 +18,27 @@ import graft.reference.Events
   *  - Transform: the same per-record shaping the Connect SMT does
   *    (epoch-millis → timestamp, SURVEY.md T3) is part of event generation
   *    here; `event_minute` is the derived partition key (T7).
-  *  - Sink: checkpointed parquet partitioned by event_minute — exactly-once,
-  *    strictly stronger than the reference's at-least-once Connect sink
-  *    (T5; divergence documented in SURVEY.md §7.4).
+  *  - Sink: each checkpointed micro-batch laid out in the warehouse's
+  *    clustered sort and published per minute — exactly-once, strictly
+  *    stronger than the reference's at-least-once Connect sink (T5, see
+  *    [[startIngest]]; divergence documented in SURVEY.md §7.4).
   *  - Late data: `withWatermark(1 minute)` closes each minute ~1 min after
   *    event time — the reference *silently drops* post-extract arrivals
   *    (T8); watermarking is the more-correct behavior, kept deliberately.
   *
   * Scale posture: the parquet warehouse partitioned on event_minute gives
   * the same metadata-only minute pruning ClickHouse's partition key gives
-  * the reference (ARCHITECTURE.md:30); shuffle-free ingest (narrow maps
-  * only), aggregation state bounded by the watermark. Minute partitioning
-  * shares the Leg 27 listing physics (dir count taxes every full-tree
-  * read): the warehouse's remedy is the existing compaction path
-  * (Warehouse.compact / wh_compact_roundtrip) run on aged partitions —
-  * unlike the cell rollups it cannot coarsen its grain, because the
-  * minutely extract's partition PRUNING is the reference contract.
+  * the reference (ARCHITECTURE.md:30); narrow maps plus, under a
+  * continuous trigger, one hash on the minute per micro-batch
+  * ([[startIngest]]), aggregation state bounded by the watermark. A
+  * minute read lists one directory, whatever the warehouse's age.
+  * Full-tree reads share the Leg 27 listing physics (dir count taxes
+  * them), and each micro-batch adds files to every minute it touches:
+  * the remedy for both is Warehouse.compact (wh_compact_roundtrip) into
+  * a new directory, which a resumed ingest may then write into under a
+  * fresh checkpoint — unlike the cell rollups the warehouse cannot
+  * coarsen its grain, because the minutely extract's partition PRUNING
+  * is the reference contract.
   */
 object Ingest {
 
@@ -128,18 +134,51 @@ object Ingest {
     startWireIngest(kafkaWireStream(spark, bootstrapServers, topic),
       warehouseDir, checkpointDir)
 
-  /** Checkpointed ingest into the minute-partitioned parquet warehouse. */
+  /** Checkpointed ingest into the minute-partitioned parquet warehouse.
+    * [[Warehouse.publish]] commits each micro-batch: its rows of each
+    * minute, sorted by (event_type, event_timestamp), are written under
+    * the hidden `<warehouseDir>/_staging/`, then the files move into
+    * their minute directories under names fixed by the batch id and the
+    * query id.
+    *
+    * The trigger picks the batch layout. A continuous trigger runs many
+    * small batches, where the cost is the file count: each batch is
+    * hashed to one file per minute ([[Warehouse.byMinute]]). An
+    * AvailableNow drain runs few large batches over an offset-ordered
+    * backlog, where that shuffle costs per row (+21–33% time and CPU on
+    * the `catchup` benchmark, 4 local cores): each task writes its own
+    * rows of each minute, and [[Warehouse.compact]] merges the files.
+    *
+    * T5 note — exactly-once: the source is replayable and the checkpoint
+    * logs each batch's offsets before the batch runs, so a batch whose
+    * commit was not logged (a crash, a kill mid-batch) re-runs over the
+    * same rows on restart. Its files keep their names, because the query
+    * id is stored in the checkpoint, so the re-run replaces what it
+    * published before instead of adding a copy; an unpublished batch
+    * leaves files only under `_staging`, which no reader lists. Batch ids
+    * of a fresh checkpoint pair with a new query id, so they cannot
+    * replace an earlier query's files.
+    *
+    * A directory that holds a `_spark_metadata` log, written by the file
+    * sink of earlier versions, is refused: `spark.read.parquet` would
+    * follow that log and hide every file published here. */
   def startIngest(
       events: DataFrame,
       warehouseDir: String,
       checkpointDir: String,
       availableNow: Boolean = true): StreamingQuery = {
+    val log = new org.apache.hadoop.fs.Path(warehouseDir, "_spark_metadata")
+    if (log.getFileSystem(events.sparkSession.sparkContext.hadoopConfiguration).exists(log))
+      throw new IllegalStateException(s"$warehouseDir holds the _spark_metadata log of an older " +
+        "file-sink ingest, which would hide every file published here: re-ingest into a fresh " +
+        "directory, or Warehouse.compact this one into a fresh directory and ingest there")
     val w = events.writeStream
-      .format("parquet")
-      .option("path", warehouseDir)
       .option("checkpointLocation", checkpointDir)
-      .partitionBy("event_minute")
-      .outputMode("append")
+      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
+        val query = batch.sparkSession.sparkContext.getLocalProperty("sql.streaming.queryId")
+        Warehouse.publish(if (availableNow) batch else Warehouse.byMinute(batch),
+          warehouseDir, s"$batchId-$query")
+      }
     (if (availableNow) w.trigger(Trigger.AvailableNow()) else w).start()
   }
 
@@ -147,7 +186,7 @@ object Ingest {
     * the reference's minutely report query (SURVEY.md T7/T8). */
   def minuteStatusCounts(spark: SparkSession, warehouseDir: String): DataFrame =
     spark.readStream
-      .schema(graft.sources.Warehouse.warehouseSchema) // incl. partition col, declared not inferred
+      .schema(Warehouse.warehouseSchema) // incl. partition col, declared not inferred
       .parquet(warehouseDir)
       .withWatermark("event_timestamp", "1 minute")
       .groupBy(
@@ -396,25 +435,19 @@ object Ingest {
     val delta = batch
       .withColumn("late_s", lateS)
       .groupBy(col("event_minute"))
-      .agg(count(lit(1)).as("n"),
-        sum(when(col("late_s") <= 0, 1L).otherwise(0L)).as("c0"),
-        sum(when(col("late_s") <= 1, 1L).otherwise(0L)).as("c1"),
-        sum(when(col("late_s") <= 5, 1L).otherwise(0L)).as("c5"),
-        sum(when(col("late_s") <= 10, 1L).otherwise(0L)).as("c10"),
-        sum(when(col("late_s") <= 30, 1L).otherwise(0L)).as("c30"),
-        sum(when(col("late_s") <= 60, 1L).otherwise(0L)).as("c60"),
-        sum(when(col("late_s") <= 300, 1L).otherwise(0L)).as("c300"),
+      .agg(count(lit(1)).as("n"), LateBuckets.map(b =>
+          sum(when(col("late_s") <= b, 1L).otherwise(0L)).as(s"c$b")) ++ Seq(
         max(col("late_s")).as("max_late_s"),
-        max(unix_micros(col("event_timestamp"))).as("max_event_us"))
+        max(unix_micros(col("event_timestamp"))).as("max_event_us")): _*)
     mergeMinuteRollup(delta, stateDir, Seq("event_minute"),
-      Seq(sum(col("n")).as("n"),
-        sum(col("c0")).as("c0"), sum(col("c1")).as("c1"),
-        sum(col("c5")).as("c5"), sum(col("c10")).as("c10"),
-        sum(col("c30")).as("c30"), sum(col("c60")).as("c60"),
-        sum(col("c300")).as("c300"),
+      ("n" +: LateBuckets.map(b => s"c$b")).map(c => sum(col(c)).as(c)) ++ Seq(
         max(col("max_late_s")).as("max_late_s"),
         max(col("max_event_us")).as("max_event_us")))
   }
+
+  /** The lateness monitor's cumulative buckets: cell `c<b>` counts the
+    * events at most `b` seconds behind the high-water mark. */
+  private val LateBuckets = Seq(0, 1, 5, 10, 30, 60, 300)
 
   /** The watermark report served from [[upsertLatenessMonitor]]'s cells —
     * the same seven-column shape and 99%-coverage recommendation rule as
@@ -422,27 +455,18 @@ object Ingest {
     * zero raw-event reads: the number a streaming operator actually
     * consults when (re)sizing `withWatermark`. */
   def servedWatermarkPlan(s: SparkSession, stateDir: String): DataFrame = {
-    val a = s.read.parquet(stateDir).agg(
-      sum(col("n")).as("n_events"),
-      sum(col("c0")).as("c0"), sum(col("c1")).as("c1"),
-      sum(col("c5")).as("c5"), sum(col("c10")).as("c10"),
-      sum(col("c30")).as("c30"), sum(col("c60")).as("c60"),
-      sum(col("c300")).as("c300"),
-      max(col("max_late_s")).as("max_late_s"))
+    val a = s.read.parquet(stateDir).agg(sum(col("n")).as("n_events"),
+      LateBuckets.map(b => sum(col(s"c$b")).as(s"c$b")) :+ max(col("max_late_s")).as("max_late_s"): _*)
     a.select(col("n_events"),
       col("c0").as("n_on_time"),
       (col("c10") - col("c0")).as("n_late_le_10s"),
       (col("c60") - col("c10")).as("n_late_le_60s"),
       (col("n_events") - col("c60")).as("n_late_gt_60s"),
       col("max_late_s"),
-      when(col("c0") * 100 >= col("n_events") * 99, 0L)
-        .when(col("c1") * 100 >= col("n_events") * 99, 1L)
-        .when(col("c5") * 100 >= col("n_events") * 99, 5L)
-        .when(col("c10") * 100 >= col("n_events") * 99, 10L)
-        .when(col("c30") * 100 >= col("n_events") * 99, 30L)
-        .when(col("c60") * 100 >= col("n_events") * 99, 60L)
-        .when(col("c300") * 100 >= col("n_events") * 99, 300L)
-        .otherwise(col("max_late_s")).as("recommended_watermark_s"))
+      // the smallest bucket covering 99% of the events, else the max
+      LateBuckets.foldRight(col("max_late_s"))((b, rest) =>
+        when(col(s"c$b") * 100 >= col("n_events") * 99, b.toLong).otherwise(rest))
+        .as("recommended_watermark_s"))
   }
 
   /** The FREQUENCY-bearing sibling of [[upsertQuantileRollup]],
@@ -821,8 +845,8 @@ object Ingest {
     * predicate, so per-minute violation counts are exact and ADDITIVE —
     * the property that lets the monitor maintain them as mergeable cells.
     * (Key UNIQUENESS is deliberately not here: it is not additive across
-    * batches; the checkpointed exactly-once sink owns that guarantee —
-    * see [[startIngest]]'s T5 note.) */
+    * batches; the checkpointed ingest's replay-safe publish owns that
+    * guarantee — see [[startIngest]]'s T5 note.) */
   val ContractRules: Seq[(String, org.apache.spark.sql.Column)] = {
     val uuid = "^[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}$"
     Seq(

@@ -235,10 +235,12 @@ class SchedulerSpec extends SparkSuite {
     val minuteDir = new File(wh).listFiles().filter(_.getName.startsWith("event_minute=")).head
     val committed = parts(minuteDir)
     assert(committed.nonEmpty)
-    // a failed batch's leftover: a readable part file the sink's
-    // _spark_metadata log never committed
+    // a failed batch's leftover: a readable part file staged for the
+    // minute but never published
     val planted = "part-99999-00000000-0000-0000-0000-000000000000.c000.snappy.parquet"
-    Files.copy(new File(minuteDir, committed.keys.min).toPath, new File(minuteDir, planted).toPath)
+    val staged = new File(wh, s"_staging/1/${minuteDir.getName}")
+    assert(staged.mkdirs())
+    Files.copy(new File(minuteDir, committed.keys.min).toPath, new File(staged, planted).toPath)
 
     val landing = tmpDir("graft-land-landing")
     val reportsDir = tmpDir("graft-land-reports")

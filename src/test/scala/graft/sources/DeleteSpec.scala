@@ -103,4 +103,26 @@ class DeleteSpec extends SparkSuite {
     assert(partDirs == Seq("event_minute=2024-01-01 00%3A01%3A00",
       "event_minute=2024-01-01 00%3A02%3A00"), partDirs)
   }
+
+  test("deleteUsers on a streamed warehouse: reads, minuteFiles and the report see the survivors") {
+    val wh = ingestMinute("graft-delete-streamed")
+    val before = Warehouse.readEvents(spark, wh)
+    val totalBefore = before.count()
+    val victims = before.select(col("user_id")).distinct().orderBy(col("user_id")).limit(11)
+      .localCheckpoint()
+    val victimIds = victims.collect().map(_.getString(0)).toSeq
+    assert(victimIds.size == 11)
+    val doomed = before.filter(col("user_id").isin(victimIds: _*)).count()
+    assert(doomed > 0)
+
+    Warehouse.deleteUsers(spark, wh, victims)
+
+    assert(Warehouse.readEvents(spark, wh).count() == totalBefore - doomed)
+    val minute = java.sql.Timestamp.from(java.time.Instant.parse("2024-01-01T00:00:00Z"))
+    val files = Warehouse.minuteFiles(spark, wh, minute)
+    assert(files.nonEmpty && files.forall(f => new java.io.File(f.toUri).isFile), files)
+    val json = graft.Pipeline.minutelyReport(spark, wh, tmpDir("graft-delete-streamed-rp"),
+      java.time.Instant.parse("2024-01-01T00:01:00Z"))
+    assert(json.contains(s""""total_events": ${totalBefore - doomed}"""), json)
+  }
 }

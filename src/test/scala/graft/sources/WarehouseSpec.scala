@@ -150,4 +150,21 @@ class WarehouseSpec extends SparkSuite {
       assert(files.map(_.getName).toSet == expected, files)
     } finally spark.conf.set(tzKey, tz)
   }
+
+  test("readMinute lists only its minute's directory") {
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    val wh = tmpDir("graft-warehouse-roots")
+    Warehouse.writeEvents(Events.generate(spark, 18000, 1704067200000L, intervalMs = 10), wh)
+    val minute = java.sql.Timestamp.from(java.time.Instant.parse("2024-01-01T00:01:00Z"))
+    val one = Warehouse.readMinute(spark, wh, minute)
+    val roots = one.queryExecution.analyzed.collectFirst {
+      case l: LogicalRelation if l.relation.isInstanceOf[HadoopFsRelation] =>
+        l.relation.asInstanceOf[HadoopFsRelation].location.rootPaths
+    }.get
+    assert(roots.map(p => new java.io.File(p.toUri).getCanonicalFile) ==
+      Seq(new java.io.File(wh, "event_minute=2024-01-01 00%3A01%3A00").getCanonicalFile), roots)
+    assert(one.count() == 6000)
+    assert(one.select("event_minute").distinct().collect().map(_.getTimestamp(0)).toSeq ==
+      Seq(minute))
+  }
 }

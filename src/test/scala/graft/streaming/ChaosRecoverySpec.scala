@@ -12,10 +12,11 @@ import graft.reference.Events
   * execution thread's job group, abandoning whatever batch is in flight
   * before its commit — restarts from the same checkpoint, and proves the
   * warehouse converges to exactly-once (no loss, no duplicates) while
-  * measuring the recovery time. The read path goes through
-  * Warehouse.readEvents (the sink's commit log), so an uncommitted
-  * batch's orphan part-files are invisible by construction — the same
-  * mechanism that makes the kill survivable.
+  * measuring the recovery time. An interrupted batch's files stay under
+  * the warehouse's hidden `_staging/` until the publish step moves them
+  * into their minute directories, and a re-run batch republishes under
+  * the same names, so Warehouse.readEvents never sees an orphan part-file
+  * or a duplicate — the mechanism that makes the kill survivable.
   */
 class ChaosRecoverySpec extends SparkSuite {
   import spark.implicits._
@@ -35,7 +36,7 @@ class ChaosRecoverySpec extends SparkSuite {
 
     // phase 1: continuous ingest, killed as soon as the first batch lands.
     // The kill trigger is a StreamingQueryListener on batch completion,
-    // not a whCount() poll: each poll re-lists the sink's commit log
+    // not a whCount() poll: each poll re-lists the warehouse
     // (~100 ms), so a 50 ms "poll" really gave fast hosts several batch
     // lengths of slack and the kill could land after ALL batches
     // committed — failing the test for host speed, not a product bug
@@ -85,7 +86,7 @@ class ChaosRecoverySpec extends SparkSuite {
         "— no failure injected this run; canceling, not failing")
     // committed state is a prefix of whole batches: no partial batch leaks
     assert(afterKill % 1000 == 0,
-      s"commit-log read surfaced a PARTIAL batch: $afterKill rows")
+      s"warehouse read surfaced a PARTIAL batch: $afterKill rows")
 
     // phase 2: restart from the same checkpoint; measure recovery
     val t0 = System.nanoTime()

@@ -65,6 +65,64 @@ class IngestStreamSpec extends SparkSuite {
     assert(all.select("event_id").distinct().count() == 5000)
   }
 
+  test("a replayed batch republishes its own files: every row once, one file per (batch, minute)") {
+    val stage = tmpDir("graft-replay-stage")
+    val wh = tmpDir("graft-replay-wh")
+    val ckpt = tmpDir("graft-replay-ckpt")
+    // 3 minutes in one staged file: one batch
+    Events.generate(spark, 18000, 1704067200000L, intervalMs = 10)
+      .write.mode("overwrite").parquet(stage)
+    def run(): Long = {
+      val q = Ingest.startIngest(
+        Events.withEventMinute(spark.readStream.schema(Events.schema).parquet(stage)), wh, ckpt)
+      q.awaitTermination(120000)
+      q.recentProgress.map(_.numInputRows).sum
+    }
+    /** Each minute directory's visible file names. */
+    def layout: Map[String, Seq[String]] =
+      new java.io.File(wh).listFiles().filter(_.getName.startsWith("event_minute=")).map { d =>
+        d.getName -> d.list().filterNot(n => n.startsWith(".") || n.startsWith("_")).sorted.toSeq
+      }.toMap
+    assert(run() == 18000)
+    val first = layout
+    assert(first.size == 3 && first.values.forall(_.size == 1), first)
+    // named by batch 0 and the query id the checkpoint keeps
+    assert(first.values.flatten.forall(_.matches("part-0-[0-9a-f-]{36}-0\\.parquet")), first)
+    // a crash after the publish but before the batch's commit was logged:
+    // the restart re-runs batch 0 over the same rows
+    Seq("0", ".0.crc").foreach(n => new java.io.File(ckpt, s"commits/$n").delete())
+    assert(run() == 18000, "batch 0 was not replayed")
+    assert(layout == first, layout)
+    val all = graft.sources.Warehouse.readEvents(spark, wh)
+    assert(all.count() == 18000)
+    assert(all.select("event_id").distinct().count() == 18000)
+    // no commit log and no staging leftovers beside the minutes
+    assert(new java.io.File(wh).list().toSeq.filterNot(_.startsWith("event_minute=")).sorted
+      == Seq("_staging"), new java.io.File(wh).list().toSeq)
+    assert(new java.io.File(wh, "_staging").list().isEmpty)
+  }
+
+  test("ingest into a warehouse holding the old file sink's log fails loudly") {
+    val stage = tmpDir("graft-oldsink-stage")
+    val old = tmpDir("graft-oldsink-wh")
+    Events.generate(spark, 2000, 1704067200000L).write.mode("overwrite").parquet(stage)
+    def src = Events.withEventMinute(spark.readStream.schema(Events.schema).parquet(stage))
+    src.writeStream.format("parquet").option("path", old)
+      .option("checkpointLocation", tmpDir("graft-oldsink-ckpt"))
+      .partitionBy("event_minute")
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start().awaitTermination(120000)
+    val e = intercept[IllegalStateException](Ingest.startIngest(src, old, tmpDir("graft-oldsink-ckpt2")))
+    assert(e.getMessage.contains("_spark_metadata") && e.getMessage.contains("fresh directory") &&
+      e.getMessage.contains("compact"), e.getMessage)
+    // the remedy: compact into a fresh directory, then ingest there
+    val fresh = s"${tmpDir("graft-oldsink-fresh")}/wh"
+    graft.sources.Warehouse.compact(spark, old, fresh)
+    assert(graft.sources.Warehouse.readEvents(spark, fresh).count() == 2000)
+    Ingest.startIngest(src, fresh, tmpDir("graft-oldsink-ckpt3")).awaitTermination(120000)
+    assert(graft.sources.Warehouse.readEvents(spark, fresh).count() == 4000)
+  }
+
   test("rate-source event stream produces valid events in real time") {
     val out = tmpDir("graft-rate-out")
     val ckpt = tmpDir("graft-rate-ckpt")

@@ -8,7 +8,9 @@ and nothing is registered in the repository. Each pair runs
 `perfbench/run.py` once from each tree with the same workload, seed and
 run length; the tree that goes first alternates from pair to pair. A pair
 in which either run's envelope shows hypervisor steal >= 5% is run once
-more, and the re-run counts in its place.
+more, and the re-run counts in its place; a re-run that still reads steal
+>= 5% is printed as `excluded` and left out of the medians and the win
+counts.
 
 Usage:
     python3 tools/bench_ab.py --workload minute_live [--workload catchup] \
@@ -75,6 +77,11 @@ def pair(trees, workload, seed, seconds, trace, base_first):
     return {side: run(trees[side], workload, seed, seconds, trace) for side in order}
 
 
+def contended(p):
+    """Whether either run of pair `p` read steal >= STEAL_LIMIT."""
+    return any(r["envelope"].get("host_steal_pct", 0) >= STEAL_LIMIT for r in p.values())
+
+
 def main():
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("--workload", action="append", required=True)
@@ -92,13 +99,19 @@ def main():
             pairs = []
             for i, seed in enumerate(seeds):
                 p = pair(trees, w, seed, a.seconds, a.trace, base_first=i % 2 == 0)
-                if any(r["envelope"].get("host_steal_pct", 0) >= STEAL_LIMIT for r in p.values()):
+                if contended(p):
                     print(f"  pair seed={seed} re-run: steal >= {STEAL_LIMIT}%", flush=True)
                     p = pair(trees, w, seed, a.seconds, a.trace, base_first=i % 2 == 0)
                 for side, r in p.items():
                     show(side, seed, r)
                     all_ok &= r["ok"]
-                pairs.append(p)
+                if contended(p):
+                    print(f"  pair seed={seed} excluded: re-run steal >= {STEAL_LIMIT}%", flush=True)
+                else:
+                    pairs.append(p)
+            if not pairs:
+                print("  no pair left to compare", flush=True)
+                continue
             names = sorted(set.intersection(*(set(r["metrics"]) for p in pairs for r in p.values())))
             print(f"  {'metric':16s} {'base':>10s} {'base IQR':>10s} {'change':>10s} {'ratio':>7s}"
                   "  change lower")
